@@ -371,9 +371,10 @@ def _streaming_window_fold(
     ``wait_for_system_duration`` (the watermark that drives timeouts).
 
     Buffered-rows state is bounded by window length x per-key rate and
-    is checkpoint-covered; rows later than the watermark never reach
-    the operator (Spark's pre-filter), matching the reference's
-    late-drop before ``WindowLogic``."""
+    is checkpoint-covered. Rows whose window end is at or below the
+    watermark are late and dropped, as the reference drops late items
+    before ``WindowLogic``; if that window is still buffered, it closes
+    and emits in that batch."""
     import pickle
 
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -391,31 +392,28 @@ def _streaming_window_fold(
             state.remove()
             return out
 
-        if state.hasTimedOut:
-            out = _close()
-            if out is not None and len(out):
-                yield out
+        # NTZ bounds are UTC wall time (session TZ pinned UTC)
+        end = we if we.tzinfo is not None else we.replace(tzinfo=timezone.utc)
+        end_ms = int(end.timestamp() * 1000)
+        if state.hasTimedOut or end_ms <= state.getCurrentWatermarkMs():
+            # timed out, or late rows (dropped): a timer cannot be armed
+            # at or below the watermark, so a buffered window closes now
+            if state.exists:
+                out = _close()
+                if out is not None and len(out):
+                    yield out
             return
         rows = pickle.loads(state.get[0]) if state.exists else []
         for pdf in pdfs:
             rows.extend(pdf[in_cols].itertuples(index=False, name=None))
         state.update((pickle.dumps(rows),))
-        # NTZ bounds are UTC wall time (session TZ pinned UTC)
-        end = we if we.tzinfo is not None else we.replace(tzinfo=timezone.utc)
-        end_ms = int(end.timestamp() * 1000)
         if idle_ms is None:
             # fire when the event-time watermark passes the window close
             state.setTimeoutTimestamp(end_ms)
         else:
             # reference idle-advancing watermark (windowing.py:230-310):
-            # close promptly if the data watermark already passed, else
-            # re-arm a wall-clock timer that fires after source silence
-            if state.getCurrentWatermarkMs() >= end_ms:
-                out = _close()
-                if out is not None and len(out):
-                    yield out
-            else:
-                state.setTimeoutDuration(idle_ms)
+            # a wall-clock timer that fires after source silence
+            state.setTimeoutDuration(idle_ms)
 
     timeout_conf = (
         GroupStateTimeout.ProcessingTimeTimeout

@@ -197,6 +197,7 @@ class TestingSource(Source):
         self._phases: list[list[Any]] | None = None
         self._released = 0
         self._seg = 0
+        self._last_mtime_ms = 0
         self._data_schema = None
 
     # -- sentinel handling ------------------------------------------
@@ -237,6 +238,11 @@ class TestingSource(Source):
         tmp = os.path.join(self._stage, "_tmp")
         df.coalesce(1).write.mode("overwrite").parquet(tmp)
         for f in sorted(glob.glob(os.path.join(tmp, "part-*.parquet"))):
+            # the file source replays in mtime order (millisecond
+            # resolution): each segment lands strictly after the last
+            ms = max(os.stat(f).st_mtime_ns // 10**6, self._last_mtime_ms + 1)
+            os.utime(f, ns=(ms * 10**6, ms * 10**6))
+            self._last_mtime_ms = ms
             shutil.move(f, os.path.join(self._stage, f"segment-{self._seg:05d}.parquet"))
             self._seg += 1
         shutil.rmtree(tmp, ignore_errors=True)

@@ -55,7 +55,6 @@ def test_matrix_batch_partition_invariance(spark, partitions):
 
 
 @pytest.mark.parametrize("files", [1, 3])
-@pytest.mark.slow
 def test_matrix_streaming_microbatch_invariance(spark, files):
     """Same flow over 1 micro-batch vs 3: final complete-mode output
     is identical (micro-batch cut points must not change results)."""

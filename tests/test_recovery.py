@@ -12,8 +12,6 @@ restarting with the same checkpoint.
 
 from __future__ import annotations
 
-import pytest
-
 import pandas as pd
 
 from bytewax_spark import operators as op
@@ -68,7 +66,6 @@ def _run_once(spark, src_dir: str, ckpt: str, out_dir: str) -> list[tuple]:
     return sorted((r["key"], r["n"]) for r in out.collect())
 
 
-@pytest.mark.slow
 def test_checkpoint_resume_continues_state(spark, tmp_path):
     src = tmp_path / "src"
     src.mkdir()
@@ -87,7 +84,6 @@ def test_checkpoint_resume_continues_state(spark, tmp_path):
     assert got2 == [("a", 2), ("a", 3), ("b", 1), ("c", 1)]
 
 
-@pytest.mark.slow
 def test_frequency_cap_state_survives_restart(spark, tmp_path):
     """The count-min counters of frequency_cap_stream ride the same
     checkpoint path: items capped before the crash STAY capped after

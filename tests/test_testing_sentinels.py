@@ -5,10 +5,13 @@ tests."""
 
 from __future__ import annotations
 
+import glob
+import os
 import time
 from datetime import timedelta
 
 import pytest
+from pyspark.sql.readwriter import DataFrameWriter
 from pyspark.sql.streaming import StreamingQueryException
 
 from bytewax_spark.sources import TestingSource
@@ -81,3 +84,30 @@ def test_plain_streaming_source_unchanged(spark, tmp_path):
     df = src.to_df()
     assert df.columns == ["v"]
     assert _drain(spark, df, str(tmp_path / "out"), str(tmp_path / "ck")) == [1, 2]
+
+
+def test_segment_mtimes_rise_with_segment_number(spark, monkeypatch):
+    """The file source replays maxFilesPerTrigger=1 segments in
+    modification-time order (millisecond resolution), so segments
+    written within one tick of the filesystem clock must still get
+    distinct, rising mtimes."""
+    write = DataFrameWriter.parquet
+
+    def same_tick(self, path, *args, **kwargs):
+        write(self, path, *args, **kwargs)
+        for f in glob.glob(os.path.join(path, "part-*")):
+            os.utime(f, (1_700_000_000, 1_700_000_000))
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", same_tick)
+    src = TestingSource(
+        [(i,) for i in range(6)] + [TestingSource.EOF()] + [(i,) for i in range(6, 12)],
+        schema="v long",
+        streaming=True,
+        files=6,
+    )
+    src.to_df()
+    assert src.advance()
+    segments = sorted(glob.glob(os.path.join(src._stage, "segment-*.parquet")))
+    assert len(segments) == 12
+    ms = [os.stat(p).st_mtime_ns // 10**6 for p in segments]
+    assert all(a < b for a, b in zip(ms, ms[1:])), ms

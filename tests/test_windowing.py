@@ -3,13 +3,19 @@ tumbling fold, sliding assignment math, session merge, windowed join)."""
 
 from __future__ import annotations
 
+import os
 from datetime import datetime, timedelta, timezone
 
+import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 import bytewax_spark.operators as op
 import bytewax_spark.operators.windowing as win
-from bytewax_spark.dataflow import Dataflow
+from bytewax_spark.dataflow import Dataflow, Stream
+from bytewax_spark.run import run_main
+from bytewax_spark.sinks import MemorySink
 from bytewax_spark.sources import TestingSource
 
 
@@ -306,3 +312,50 @@ def test_session_window_late_split(spark):
     assert got == {(0, 1), (30, 2)}
     meta = {(r["window_id"], tuple(r["merged_ids"])) for r in rows(wo.meta)}
     assert meta == {(0, ()), (1, ())}
+
+
+def test_streaming_fold_window_drops_late_rows(spark, tmp_path):
+    """A file replayed after the watermark passed its windows: its rows
+    are dropped, not armed as timers below the watermark (which fails
+    the query), and a window still buffered emits once, without them."""
+    watched = tmp_path / "in"
+    watched.mkdir()
+    backlog = [
+        [("a", ts(5), "a05")],  # opens a's [0, 10)
+        [("a", ts(50), "a50")],  # watermark -> 00:49
+        [("a", ts(6), "late-a06"), ("b", ts(7), "late-b07")],  # late
+        [("a", datetime(2024, 1, 1, 2, 0), "far")],  # closes [50, 60)
+    ]
+    for i, rows_ in enumerate(backlog):
+        tmp = str(tmp_path / f"{i}.parquet")
+        k, t, tag = zip(*rows_)
+        pq.write_table(pa.table({"k": list(k), "ts": pa.array(t, pa.timestamp("us", tz="UTC")), "tag": list(tag)}), tmp)
+        os.utime(tmp, (1_700_000_000 + i, 1_700_000_000 + i))
+        os.replace(tmp, watched / f"{i}.parquet")
+
+    def joined(pdf):
+        return pd.DataFrame(
+            {
+                "key": [pdf["key"].iloc[0]],
+                "window_start": [pdf["window_start"].iloc[0]],
+                "tags": ["-".join(sorted(pdf["tag"]))],
+            }
+        )
+
+    flow = Dataflow("late_fold")
+    df = (
+        spark.readStream.schema("k string, ts timestamp, tag string")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(watched))
+    )
+    ks = op.key_on("key", Stream(flow, "in", df), "k")
+    folded = win.fold_window(
+        "w", ks, win.EventClock("ts", timedelta(minutes=1)), win.TumblingWindower(timedelta(minutes=10)),
+        fold=joined, schema="key string, window_start timestamp, tags string",
+    )
+    op.output("out", folded, MemorySink("late_fold_out"))
+    run_main(flow, checkpoint=str(tmp_path / "ckpt"), availableNow=True)
+    got = sorted(
+        (r["key"], r["window_start"].minute, r["tags"]) for r in spark.sql("SELECT * FROM late_fold_out").collect()
+    )
+    assert got == [("a", 0, "a05"), ("a", 50, "a50")]
