@@ -27,6 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 __all__ = [
     "adamic_adar",
@@ -561,13 +562,18 @@ def _pair_suffix_agg_arrow(
             out_b = B[starts[keep]]
         if out_a.size:
             yield pa.RecordBatch.from_arrays(
-                [pa.array(out_a), pa.array(out_b), pa.array(sums[keep])],
+                [pa.array(out_a, pa.int64()), pa.array(out_b, pa.int64()), pa.array(sums[keep])],
                 names=["id_a", "id_b", out_col],
             )
 
     return pre.repartition(shuffle_parts, "id_a").mapInArrow(
         gen, f"id_a long, id_b long, {out_col} long"
     )
+
+
+def _integral_ids(sym: DataFrame) -> bool:
+    """The Arrow pair kernel's output schema is fixed to ``long`` ids."""
+    return isinstance(sym.schema["u"].dataType, IntegralType)
 
 
 def common_neighbors(
@@ -577,7 +583,6 @@ def common_neighbors(
     min_common: int = 2,
     max_degree: int | None = None,
     n_slices: int = 1,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Link prediction by common neighbors (Liben-Nowell & Kleinberg
     2003, public): for every NON-adjacent pair at distance 2, the
@@ -619,14 +624,12 @@ def common_neighbors(
     reducer keeps the partial pass same-stage. ``n_slices`` is
     retained for API compatibility; slicing is a no-op now.
 
-    ``impl="arrow"`` (default, r8) replaces the post-exchange
-    ``explode → HashAggregate`` with the :func:`_pair_suffix_agg_arrow`
-    numpy sort-aggregation — value-identical (parity-tested + oracle),
-    ~6x smaller per-task state; ``impl="sql"`` keeps the r7 plan."""
+    Integer ids take the :func:`_pair_suffix_agg_arrow` numpy
+    sort-aggregation in place of the post-exchange ``explode →
+    HashAggregate`` (value-identical, ~6x smaller per-task state, ids
+    out as ``long``); any other id type keeps that SQL shape."""
     if n_slices < 1:
         raise ValueError(f"n_slices must be >= 1, got {n_slices}")
-    if impl not in ("arrow", "sql"):
-        raise ValueError(f"impl must be 'arrow' or 'sql', got {impl!r}")
     sym = (
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("u"),
@@ -670,7 +673,7 @@ def common_neighbors(
         F.array(F.col("v")).alias("_bs"),
         F.lit(-1).cast("long").alias("_c"),
     )
-    if impl == "arrow":
+    if _integral_ids(sym):
         wedges = _pair_suffix_agg_arrow(
             arrs.unionByName(sent), "common", min_common, shuffle_parts
         )
@@ -715,7 +718,6 @@ def adamic_adar(
     min_score_micro: int = 1,
     max_degree: int | None = None,
     n_slices: int = 1,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Adamic-Adar link prediction (Adamic & Adar 2003, public):
     common neighbors weighted by 1/ln(degree) — a shared RARE neighbor
@@ -752,14 +754,10 @@ def adamic_adar(
     ``n_slices`` is retained for API compatibility; the explicit
     repartition pins parallelism, so slicing is a no-op.
 
-    ``impl="arrow"`` (default, r8) replaces the post-exchange
-    ``explode → HashAggregate`` with the :func:`_pair_suffix_agg_arrow`
-    numpy sort-aggregation — value-identical (parity-tested + oracle),
-    ~6x smaller per-task state; ``impl="sql"`` keeps the r7 plan."""
+    Integer ids take the :func:`_pair_suffix_agg_arrow` kernel, as in
+    :func:`common_neighbors`; any other id type keeps the SQL shape."""
     if n_slices < 1:
         raise ValueError(f"n_slices must be >= 1, got {n_slices}")
-    if impl not in ("arrow", "sql"):
-        raise ValueError(f"impl must be 'arrow' or 'sql', got {impl!r}")
     sym = (
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("u"),
@@ -812,7 +810,7 @@ def adamic_adar(
         F.array(F.col("v")).alias("_bs"),
         F.lit(-1).cast("long").alias("_w"),
     )
-    if impl == "arrow":
+    if _integral_ids(sym):
         return _pair_suffix_agg_arrow(
             arrs.unionByName(sent), "aa_micro", min_score_micro, shuffle_parts
         )

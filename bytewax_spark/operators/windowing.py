@@ -9,6 +9,9 @@ with partial aggregation, and event-time lateness in streaming is
 (custom folds, windowed joins) use :func:`assign_windows`, which
 compiles assignment to pure integer/sequence/lag expressions — still
 codegen'd, still SQL-expressible (hence DuckDB-oracle-able).
+Streaming custom folds run on the ``stateful_batch`` driver
+(:mod:`bytewax_spark.streaming`), as the reference builds its
+windowing on its one ``stateful_batch`` primitive.
 
 Semantics notes (SURVEY §7.3 divergences, documented not hidden):
 
@@ -29,9 +32,10 @@ Semantics notes (SURVEY §7.3 divergences, documented not hidden):
 from __future__ import annotations
 
 import math
-from collections.abc import Callable, Iterable, Mapping
+from collections.abc import Callable, Mapping
 from dataclasses import dataclass
 from datetime import datetime, timedelta, timezone
+from functools import partial
 from typing import Any
 
 import pandas as pd
@@ -40,6 +44,7 @@ from pyspark.sql import functions as F
 
 from bytewax_spark.dataflow import KeyedStream, Stream
 from bytewax_spark.operators import _require_keyed
+from bytewax_spark.streaming import StatefulBatchLogic, _stateful_batch_df
 
 __all__ = [
     "UTC_ALIGN",
@@ -98,10 +103,12 @@ class EventClock:
     windows eventually close even with no further input. Spark's
     event-time watermark only moves with data, so a pure-streaming
     idle topology would hold its last windows open forever. Setting
-    ``close_on_idle=timedelta(...)`` arms a processing-time timer in
-    the custom-fold paths: a (key, window) that receives no new rows
-    for that wall-clock duration closes and emits. Batch/availableNow
-    runs don't need it (EOF closes everything)."""
+    ``close_on_idle=timedelta(...)`` arms a processing-time timer per
+    key in the streaming custom-fold path: once a key receives no new
+    rows for that wall-clock duration, every open window of that key
+    closes and emits. Windows the watermark passes still close with
+    the key's next rows. Batch/availableNow runs don't need it (EOF
+    closes everything)."""
 
     ts_field: str
     wait_for_system_duration: timedelta = timedelta(0)
@@ -353,177 +360,91 @@ class WindowOut:
 # the generic windowed aggregation
 # ---------------------------------------------------------------------------
 
-def _streaming_window_fold(
-    with_win: DataFrame,
-    key_col: str,
-    fold: Callable[[pd.DataFrame], pd.DataFrame],
-    schema: Any,
-    close_on_idle: timedelta | None = None,
-) -> DataFrame:
-    """Streaming custom window fold (SURVEY §7.4 hard part #1/#4):
-    the reference runs arbitrary ``WindowLogic`` per (key, window) and
-    emits on watermark close; Spark's built-in windowed agg only takes
-    declarative expressions. Compile: state key = (key, window bounds),
-    rows buffer in the state store across micro-batches, an event-time
-    timeout at ``window_end`` fires when the watermark passes it — the
-    buffered rows are folded once and the window emits exactly once
-    (append semantics). Requires an ``EventClock`` with a nonzero
-    ``wait_for_system_duration`` (the watermark that drives timeouts).
+class _WindowFold(StatefulBatchLogic):
+    """One stream key's open windows for a streaming custom fold (SURVEY
+    §7.4 hard parts #1, #3, #4: the reference's opaque ``WindowLogic``).
 
-    Buffered-rows state is bounded by window length x per-key rate and
-    is checkpoint-covered. Rows whose window end is at or below the
-    watermark are late and dropped, as the reference drops late items
-    before ``WindowLogic``; if that window is still buffered, it closes
-    and emits in that batch."""
-    import pickle
+    The snapshot is a list of ``(start_us, end_us, rows)``, ``rows``
+    being buffered input tuples in ``cols`` order. Tumbling and sliding
+    rows join the window of their :func:`assign_windows` bounds and are
+    late once that window's end is at or below the watermark. With
+    ``gap_us`` (sessions, the reference's ``on_merge``,
+    ``windowing.py:688-715``) each row seeds a ``[ts, ts + gap)``
+    session, sort-and-merge joins sessions with ``next.start <=
+    cur.end``, and a row below the watermark is late
+    (``LATE_SESSION_ID``). Late rows are dropped; the first watermark
+    is the epoch, so rows before 1970 are late. A window folds and
+    emits once, when the watermark reaches its end; with ``idle`` (the
+    clock's ``close_on_idle``) the timer is a wall-clock delay instead,
+    and ``on_eof`` flushes all of the key's windows when it fires."""
 
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    def __init__(self, snap, *, cols, fold, gap_us, ts_field, idle):
+        self.windows: list[tuple[int, int, list]] = snap or []
+        self.cols, self.fold, self.gap_us = cols, fold, gap_us
+        self.ts_field, self.idle = ts_field, idle
 
-    in_cols = with_win.columns
-    idle_ms = int(close_on_idle.total_seconds() * 1000) if close_on_idle else None
+    def _wm_us(self) -> int:
+        wm = self.watermark
+        return -(2**63) if wm is None else (wm - UTC_ALIGN) // timedelta(microseconds=1)
 
-    def run(key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        k, ws, we = key
-
-        def _close():
-            (blob,) = state.get
-            pdf = pd.DataFrame(pickle.loads(blob), columns=in_cols)
-            out = fold(pdf)
-            state.remove()
-            return out
-
-        # NTZ bounds are UTC wall time (session TZ pinned UTC)
-        end = we if we.tzinfo is not None else we.replace(tzinfo=timezone.utc)
-        end_ms = int(end.timestamp() * 1000)
-        if state.hasTimedOut or end_ms <= state.getCurrentWatermarkMs():
-            # timed out, or late rows (dropped): a timer cannot be armed
-            # at or below the watermark, so a buffered window closes now
-            if state.exists:
-                out = _close()
-                if out is not None and len(out):
-                    yield out
-            return
-        rows = pickle.loads(state.get[0]) if state.exists else []
-        for pdf in pdfs:
-            rows.extend(pdf[in_cols].itertuples(index=False, name=None))
-        state.update((pickle.dumps(rows),))
-        if idle_ms is None:
-            # fire when the event-time watermark passes the window close
-            state.setTimeoutTimestamp(end_ms)
+    def on_batch(self, pdf):
+        wm = self._wm_us()
+        rows = pdf[self.cols].itertuples(index=False, name=None)
+        if self.gap_us is None:
+            bounds = zip(_micros(pdf["window_start"]), _micros(pdf["window_end"]))
+            open_ = {(start, end): buf for start, end, buf in self.windows}
+            for (start, end), row in zip(bounds, rows):
+                if end > wm:
+                    open_.setdefault((start, end), []).append(row)
+            self.windows = [(start, end, buf) for (start, end), buf in open_.items()]
         else:
-            # reference idle-advancing watermark (windowing.py:230-310):
-            # a wall-clock timer that fires after source silence
-            state.setTimeoutDuration(idle_ms)
-
-    timeout_conf = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if idle_ms is not None
-        else GroupStateTimeout.EventTimeTimeout
-    )
-    return with_win.groupBy(key_col, "window_start", "window_end").applyInPandasWithState(
-        run,
-        outputStructType=schema,
-        stateStructType="buf binary",
-        outputMode="append",
-        timeoutConf=timeout_conf,
-    )
-
-
-def _streaming_session_fold(
-    df: DataFrame,
-    key_col: str,
-    ts_field: str,
-    gap: timedelta,
-    fold: Callable[[pd.DataFrame], pd.DataFrame],
-    schema: Any,
-    close_on_idle: timedelta | None = None,
-) -> DataFrame:
-    """Streaming custom fold over SESSION windows (SURVEY §7.4 hard
-    part #3 — the reference's ``on_merge`` protocol,
-    ``windowing.py:688-715, :979-992``).
-
-    Session bounds move as data arrives, so state cannot key on window
-    bounds like :func:`_streaming_window_fold`. Compile: state key =
-    the stream key alone; state = the key's open sessions, each
-    ``(start, end=last_ts+gap, buffered rows)``. Each micro-batch
-    seeds a single-row session per new row, then runs the reference's
-    sort-and-merge (adjacent sessions merge when ``next.start <=
-    cur.end`` — a gap-sized or smaller silence joins, matching the
-    batch path's ``lag > gap`` split). A session emits its fold
-    exactly once when the event-time watermark passes its end; the
-    per-key timer re-arms to the earliest still-open session end.
-
-    State is bounded by (open sessions per key) x (rows per session)
-    and is checkpoint-covered. Timestamps before 1970 would compare
-    below the initial 0 watermark and mis-emit; session data is
-    assumed epoch-positive.
-    """
-    import pickle
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    in_cols = df.columns
-    ts_i = in_cols.index(ts_field)
-    gap_us = _us(gap)
-    idle_ms = int(close_on_idle.total_seconds() * 1000) if close_on_idle else None
-
-    def _emit_due(sessions: list, wm_ms: int):
-        due = [s for s in sessions if s[1] // 1000 <= wm_ms]
-        keep = [s for s in sessions if s[1] // 1000 > wm_ms]
-        outs = []
-        for start_us, end_us, rows in due:
-            pdf = pd.DataFrame(rows, columns=in_cols)
-            pdf["window_start"] = pd.Timestamp(start_us * 1000)
-            pdf["window_end"] = pd.Timestamp(end_us * 1000)
-            out = fold(pdf)
-            if out is not None and len(out):
-                outs.append(out)
-        return outs, keep
-
-    def run(key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        sessions = pickle.loads(state.get[0]) if state.exists else []
-        idle_fired = state.hasTimedOut and idle_ms is not None
-        if not state.hasTimedOut:
-            for pdf in pdfs:
-                for row in pdf[in_cols].itertuples(index=False, name=None):
-                    t = pd.Timestamp(row[ts_i]).value // 1000
-                    sessions.append((t, t + gap_us, [row]))
-            sessions.sort(key=lambda s: s[0])
+            for t, row in zip(_micros(pdf[self.ts_field]), rows):
+                if t >= wm:
+                    self.windows.append((t, t + self.gap_us, [row]))
+            self.windows.sort(key=lambda s: s[0])
             merged: list = []
-            for s in sessions:
+            for s in self.windows:
                 if merged and s[0] <= merged[-1][1]:
                     last = merged[-1]
                     merged[-1] = (last[0], max(last[1], s[1]), last[2] + s[2])
                 else:
                     merged.append(s)
-            sessions = merged
-        # the source idled past close_on_idle: the reference's
-        # system-advancing watermark has passed every open session —
-        # flush them all (wm -> +inf)
-        wm = 2**62 if idle_fired else state.getCurrentWatermarkMs()
-        outs, sessions = _emit_due(sessions, wm)
-        if sessions:
-            state.update((pickle.dumps(sessions),))
-            if idle_ms is None:
-                state.setTimeoutTimestamp(min(s[1] for s in sessions) // 1000)
-            else:
-                state.setTimeoutDuration(idle_ms)
-        elif state.exists:
-            state.remove()
-        yield from outs
+            self.windows = merged
+        return self.on_notify()
 
-    timeout_conf = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if idle_ms is not None
-        else GroupStateTimeout.EventTimeTimeout
-    )
-    return df.groupBy(key_col).applyInPandasWithState(
-        run,
-        outputStructType=schema,
-        stateStructType="buf binary",
-        outputMode="append",
-        timeoutConf=timeout_conf,
-    )
+    def on_notify(self):
+        wm = self._wm_us()
+        due = [w for w in self.windows if w[1] <= wm]
+        self.windows = [w for w in self.windows if w[1] > wm]
+        return self._fold(due), (self.RETAIN if self.windows else self.DISCARD)
+
+    def on_eof(self):
+        due, self.windows = self.windows, []
+        return self._fold(due), self.DISCARD
+
+    def notify_at(self):
+        if self.idle is not None:
+            return self.idle
+        return UTC_ALIGN + timedelta(microseconds=min(w[1] for w in self.windows))
+
+    def snapshot(self):
+        return self.windows
+
+    def _fold(self, windows: list) -> pd.DataFrame | None:
+        outs = []
+        for start, end, rows in windows:
+            pdf = pd.DataFrame(rows, columns=self.cols)
+            pdf["window_start"] = pd.Timestamp(start * 1000)
+            pdf["window_end"] = pd.Timestamp(end * 1000)
+            out = self.fold(pdf)
+            if out is not None and len(out):
+                outs.append(out)
+        return pd.concat(outs, ignore_index=True) if outs else None
+
+
+def _micros(col: pd.Series) -> list[int]:
+    """Epoch microseconds of a naive-UTC timestamp column."""
+    return col.to_numpy("datetime64[us]").astype("int64").tolist()
 
 
 def _windowed_agg(
@@ -562,25 +483,25 @@ def _windowed_agg(
 
             def fold(pdf: pd.DataFrame) -> pd.DataFrame:  # noqa: F811
                 return inner(pdf.sort_values(tsf, kind="stable").reset_index(drop=True))
-        if df.isStreaming and isinstance(windower, SessionWindower):
-            if not isinstance(clock, EventClock):
-                raise ValueError(
-                    f"step {step_id!r}: streaming session folds need an EventClock "
-                    "(the watermark drives session close)"
-                )
-            out = _streaming_session_fold(
-                df, up.key_col, clock.ts_field, windower.gap, fold, schema,
-                close_on_idle=clock.close_on_idle,
-            )
-            return KeyedStream(up.flow, fq, out, up.key_col)
-        with_win = assign_windows(df, ts, windower, key_col=up.key_col)
-        if df.isStreaming:
-            idle = clock.close_on_idle if isinstance(clock, EventClock) else None
-            out = _streaming_window_fold(with_win, up.key_col, fold, schema, close_on_idle=idle)
-        else:
+        if not df.isStreaming:
+            with_win = assign_windows(df, ts, windower, key_col=up.key_col)
             out = with_win.groupBy(up.key_col, "window_start", "window_end").applyInPandas(
                 lambda pdf: fold(pdf), schema=schema
             )
+            return KeyedStream(up.flow, fq, out, up.key_col)
+        session = isinstance(windower, SessionWindower)
+        if session and not isinstance(clock, EventClock):
+            raise ValueError(
+                f"step {step_id!r}: streaming session folds need an EventClock "
+                "(the watermark drives session close)"
+            )
+        idle = getattr(clock, "close_on_idle", None)
+        builder = partial(_WindowFold, cols=df.columns, fold=fold, idle=idle,
+                          gap_us=_us(windower.gap) if session else None,
+                          ts_field=getattr(clock, "ts_field", None))
+        src = df if session else assign_windows(df, ts, windower, key_col=up.key_col)
+        timers = "event" if idle is None else "processing"
+        out = _stateful_batch_df(src, up.key_col, builder, schema, timers)
         return KeyedStream(up.flow, fq, out, up.key_col)
 
     win = windower.group_expr(ts).alias("_w")
@@ -711,10 +632,16 @@ def fold_window(
 ) -> KeyedStream:
     """Per-(key, window) fold, emitted on window close (reference
     windowing.py:1717-1846). Columnar ``aggs`` → ``groupBy(key,
-    window).agg`` (partial agg + codegen); opaque ``fold`` →
-    ``applyInPandas`` per (key, window). ``ordered=True`` replays the
-    window's items to ``fold`` in timestamp order (reference
-    windowing.py:1284-1287)."""
+    window).agg`` (partial agg + codegen). Opaque ``fold`` gets one
+    window's rows plus ``window_start``/``window_end`` columns: in
+    batch, ``applyInPandas`` per (key, window); in streaming, the
+    ``stateful_batch`` driver keyed by the stream key, which buffers
+    each open window's rows and folds the window once, when the
+    watermark passes its end (:class:`_WindowFold`; needs an
+    ``EventClock`` with a nonzero ``wait_for_system_duration``, or
+    ``close_on_idle``). Late rows are dropped. ``ordered=True``
+    replays the window's items to ``fold`` in timestamp order
+    (reference windowing.py:1284-1287)."""
     return _windowed_agg(
         step_id,
         "fold_window",

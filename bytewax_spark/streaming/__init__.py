@@ -11,19 +11,31 @@ The reference's engine core is ONE stateful operator —
   object lives in the Spark state store (pickled snapshot, exactly the
   reference's pickle snapshot protocol), ``notify_at`` maps to group
   state timeouts, recovery is checkpointing (no custom code, SURVEY
-  §3).
+  §3). This is the only streaming stateful driver: the windowed custom
+  folds in ``operators.windowing`` run on it too.
 - **batch**: ``groupBy(key).applyInPandas`` — one batch per key, then
   ``on_eof`` (batch EOF = all input seen), deterministic and
   oracle-checkable.
 
-Semantics divergences (documented, not hidden):
-- Streaming has no EOF signal; ``on_eof`` fires in batch mode and,
-  in streaming, when a processing-time timeout set by ``notify_at``
-  expires (the reference's wall-clock-advancing watermark has the same
-  role, SURVEY §7.3).
-- Items arrive batched per micro-batch per key, ordered within a
-  batch by the source; cross-batch order follows event arrival as in
-  the reference.
+The streaming driver owns four rules, so no logic re-implements them:
+
+- **Watermark**: ``logic.watermark`` is the query's event-time
+  watermark as a UTC ``datetime`` when the call started; None in
+  batch mode or when the query sets no watermark.
+- **Timestamps**: a ``datetime`` from ``notify_at`` with no time zone
+  is UTC wall time (the session time zone is pinned to UTC), never the
+  worker's local zone.
+- **Past timers**: a ``datetime`` from ``notify_at`` at or below the
+  watermark calls ``on_notify`` in the same call; Spark cannot arm a
+  timer there.
+- **EOF**: streaming has no EOF signal, so ``on_eof`` follows
+  ``on_notify`` only for processing-time timeouts: idle means EOF, as
+  the reference's wall-clock-advancing watermark (SURVEY §7.3). An
+  event-time timeout is a watermark notify, not the end of input.
+
+Semantics divergence (documented, not hidden): items arrive batched
+per micro-batch per key, ordered within a batch by the source;
+cross-batch order follows event arrival as in the reference.
 """
 
 from __future__ import annotations
@@ -31,10 +43,12 @@ from __future__ import annotations
 import pickle
 from abc import ABC, abstractmethod
 from collections.abc import Callable
-from datetime import datetime, timedelta
+from datetime import datetime, timedelta, timezone
 from typing import Any
 
 import pandas as pd
+from pyspark.errors import PySparkRuntimeError
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -74,6 +88,14 @@ class StatefulBatchLogic(ABC):
     RETAIN = False
     DISCARD = True
 
+    _watermark: datetime | None = None
+
+    @property
+    def watermark(self) -> datetime | None:
+        """The query's event-time watermark (UTC) when this call
+        started; None in batch mode or when the query sets none."""
+        return self._watermark
+
     @abstractmethod
     def on_batch(self, pdf: pd.DataFrame) -> tuple[pd.DataFrame | None, bool]: ...
 
@@ -82,15 +104,29 @@ class StatefulBatchLogic(ABC):
         return None, False
 
     def on_eof(self) -> tuple[pd.DataFrame | None, bool]:
-        """End of input (batch mode; streaming: after notify timeout)."""
+        """End of input (batch mode; streaming: after a processing-time
+        notify)."""
         return None, False
 
     def notify_at(self) -> datetime | timedelta | None:
-        """Next wakeup: timedelta = processing-time delay from now."""
+        """Next wakeup: timedelta = processing-time delay from now;
+        datetime = event time the watermark must pass (naive = UTC)."""
         return None
 
     def snapshot(self) -> Any:
         return None
+
+
+_EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
+
+
+def _utc(dt: datetime) -> datetime:
+    # naive = UTC wall time (session time zone pinned), not worker-local
+    return dt if dt.tzinfo is not None else dt.replace(tzinfo=timezone.utc)
+
+
+def _epoch_ms(dt: datetime) -> int:
+    return (_utc(dt) - _EPOCH) // timedelta(milliseconds=1)
 
 
 def _ensure_key(pdf: pd.DataFrame | None, key_col: str, key_val: Any) -> pd.DataFrame | None:
@@ -113,22 +149,38 @@ def stateful_batch(
 
     ``schema`` is the output schema (must contain the key column; it is
     auto-filled if the logic omits it). Streaming: state = pickled
-    ``logic.snapshot()`` in the state store; ``notify_at`` returning a
-    ``timedelta`` arms a processing-time timeout which fires
-    ``on_notify`` then ``on_eof`` if the logic still exists.
+    ``logic.snapshot()`` in the state store. ``notify_at`` returning a
+    ``timedelta`` arms a processing-time timeout, which fires
+    ``on_notify`` then, if the logic still exists, ``on_eof``; a
+    ``datetime`` arms an event-time timeout, which fires ``on_notify``
+    alone once the watermark passes it (naive = UTC; at or below the
+    watermark already, ``on_notify`` runs in the same call).
+    ``logic.watermark`` holds the watermark (UTC) for each call.
 
-    ``timers``: ``none`` (default) | ``processing`` | ``event``.
-    Logic that uses ``notify_at`` must opt into ``processing``/``event``
-    — and note that a timeout-enabled query never goes idle under
+    ``timers``: ``none`` (default) | ``processing`` | ``event``
+    (``event`` needs ``withWatermark`` upstream). Logic that uses
+    ``notify_at`` must opt into one — and note that a
+    ``processing`` query never goes idle under
     ``trigger(availableNow)`` (Spark schedules state-cleanup batches
     while any state exists), so drive it with a processing-time
     trigger and stop it explicitly, like any long-running stream.
     """
     up = _require_keyed(step_id, up)
     fq = up.flow.register(step_id, "stateful_batch", (up.step_id,))
-    key_col = up.key_col
+    out_df = _stateful_batch_df(up.df, up.key_col, builder, schema, timers)
+    return KeyedStream(up.flow, fq, out_df, up.key_col)
 
-    if not up.df.isStreaming:
+
+def _stateful_batch_df(
+    df: DataFrame,
+    key_col: str,
+    builder: Callable[[Any], StatefulBatchLogic],
+    schema: Any,
+    timers: str,
+) -> DataFrame:
+    """The driver behind :func:`stateful_batch`, returning the output
+    DataFrame (step registration is the caller's)."""
+    if not df.isStreaming:
         def run_batch(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
             logic = builder(None)
             outs = []
@@ -144,38 +196,52 @@ def stateful_batch(
                 return pd.DataFrame()
             return pd.concat(outs, ignore_index=True)
 
-        out_df = up.df.groupBy(key_col).applyInPandas(run_batch, schema=schema)
-        return KeyedStream(up.flow, fq, out_df, key_col)
+        return df.groupBy(key_col).applyInPandas(run_batch, schema=schema)
 
     def run_stream(key: tuple, pdfs, state: GroupState):
-        snap = pickle.loads(state.get[0]) if state.exists else None
-        logic = builder(snap)
+        try:
+            wm_ms = state.getCurrentWatermarkMs()
+        except PySparkRuntimeError:  # the query sets no watermark
+            wm_ms = None
+        wm = None if wm_ms is None else _EPOCH + timedelta(milliseconds=wm_ms)
+
+        def build(snap: Any) -> StatefulBatchLogic:
+            logic = builder(snap)
+            logic._watermark = wm
+            return logic
+
+        logic = build(pickle.loads(state.get[0]) if state.exists else None)
         outs = []
+
+        def call(fn, *args) -> bool:
+            out, complete = fn(*args)
+            outs.append(out)
+            return complete
+
         complete = False
         if state.hasTimedOut:
-            out, complete = logic.on_notify()
-            if out is not None:
-                outs.append(out)
-            if not complete:
-                out, complete = logic.on_eof()
-                if out is not None:
-                    outs.append(out)
+            complete = call(logic.on_notify)
+            if not complete and timers == "processing":
+                complete = call(logic.on_eof)
         else:
             for pdf in pdfs:
-                out, complete = logic.on_batch(pdf)
-                if out is not None:
-                    outs.append(out)
-                if complete:
-                    break
+                if complete:  # discarded mid-batch: later rows start afresh
+                    logic = build(None)
+                complete = call(logic.on_batch, pdf)
+        na = None if complete else logic.notify_at()
+        if isinstance(na, datetime) and wm is not None and _utc(na) <= wm:
+            complete = call(logic.on_notify)
+            na = None if complete else logic.notify_at()
         if complete:
             state.remove()
         else:
             state.update((pickle.dumps(logic.snapshot()),))
-            na = logic.notify_at()
             if isinstance(na, timedelta):
                 state.setTimeoutDuration(int(na.total_seconds() * 1000))
             elif isinstance(na, datetime):
-                state.setTimeoutTimestamp(int(na.timestamp() * 1000))
+                # a timer still in the past fires at the next advance
+                ms = _epoch_ms(na)
+                state.setTimeoutTimestamp(ms if wm_ms is None else max(ms, wm_ms))
         for o in outs:
             o = _ensure_key(o, key_col, key[0])
             if o is not None and len(o):
@@ -186,14 +252,13 @@ def stateful_batch(
         "processing": GroupStateTimeout.ProcessingTimeTimeout,
         "event": GroupStateTimeout.EventTimeTimeout,
     }[timers]
-    out_df = up.df.groupBy(key_col).applyInPandasWithState(
+    return df.groupBy(key_col).applyInPandasWithState(
         run_stream,
         outputStructType=schema,
         stateStructType="snapshot binary",
         outputMode="append",
         timeoutConf=timeout_conf,
     )
-    return KeyedStream(up.flow, fq, out_df, key_col)
 
 
 def stateful(

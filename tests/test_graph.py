@@ -299,6 +299,20 @@ def test_common_neighbors_max_degree_drops_hub_wedges(spark):
     assert graph.common_neighbors(edges, min_common=1, max_degree=3).count() == 0
 
 
+def test_common_neighbors_string_ids(spark):
+    """String ids take the SQL shape (the Arrow kernel emits long ids)."""
+    from bytewax_spark.functions import graph
+
+    edges = spark.createDataFrame(
+        [("n1", "n2"), ("n2", "n3"), ("n1", "n4"), ("n4", "n3")], "id_a string, id_b string"
+    )
+    got = {
+        (r["id_a"], r["id_b"]): (r["common"], r["jaccard"])
+        for r in graph.common_neighbors(edges, min_common=2).collect()
+    }
+    assert got == {("n1", "n3"): (2, 1.0), ("n2", "n4"): (2, 1.0)}
+
+
 def test_adamic_adar_weights_rare_neighbors_higher(spark):
     from bytewax_spark.functions import graph
 
@@ -334,6 +348,30 @@ def test_adamic_adar_excludes_adjacent_and_sums(spark):
 
     w = round(1_000_000 / math.log(2))
     assert got == {(1, 3): 2 * w, (2, 4): 2 * w}
+
+
+def test_adamic_adar_string_ids(spark):
+    from bytewax_spark.functions import graph
+
+    edges = spark.createDataFrame(
+        [("n1", "n2"), ("n2", "n3"), ("n3", "n4"), ("n4", "n1")], "id_a string, id_b string"
+    )
+    got = {(r["id_a"], r["id_b"]): r["aa_micro"] for r in graph.adamic_adar(edges).collect()}
+    import math
+
+    w = round(1_000_000 / math.log(2))
+    assert got == {("n1", "n3"): 2 * w, ("n2", "n4"): 2 * w}
+
+
+def test_link_prediction_int_ids_with_negatives(spark):
+    """INT ids outside the packed-key range still come back as longs."""
+    from bytewax_spark.functions import graph
+
+    edges = spark.createDataFrame([(-1, 2), (2, 3), (3, 4), (4, -1)], "id_a int, id_b int")
+    got = {(r["id_a"], r["id_b"]) for r in graph.adamic_adar(edges).collect()}
+    assert got == {(-1, 3), (2, 4)}
+    got = {(r["id_a"], r["id_b"]) for r in graph.common_neighbors(edges, min_common=2).collect()}
+    assert got == {(-1, 3), (2, 4)}
 
 
 def test_hits_star_graph_by_hand(spark):

@@ -38,8 +38,8 @@ def _make_logic():
     return RunningCount
 
 
-def _write_batch(spark, src_dir: str, rows, name: str) -> None:
-    df = spark.createDataFrame(rows, "key string, v long")
+def _write_batch(spark, src_dir: str, rows, name: str, schema: str = "key string, v long") -> None:
+    df = spark.createDataFrame(rows, schema)
     df.coalesce(1).write.mode("overwrite").parquet(f"{src_dir}/_tmp")
     import glob
     import shutil
@@ -120,3 +120,57 @@ def test_frequency_cap_state_survives_restart(spark, tmp_path):
     _write_batch(spark, str(src), [("a", 7), ("a", 1), ("a", 1), ("a", 9)], "f1")
     got2 = run_once()
     assert got2 == [("a", 1), ("a", 1), ("a", 7), ("a", 7), ("a", 9)]
+
+
+def test_window_fold_resumes_open_window(spark, tmp_path):
+    """A streaming custom-fold tumbling window that is still open when
+    the query stops keeps its buffered rows in the checkpoint: after the
+    restart it emits once, with rows from both runs."""
+    from datetime import datetime, timedelta
+
+    import bytewax_spark.operators.windowing as win
+
+    src = tmp_path / "wsrc"
+    src.mkdir()
+    ckpt = str(tmp_path / "wckpt")
+    out_dir = str(tmp_path / "wout")
+    schema = "k string, ts timestamp, tag string"
+    out_schema = "key string, window_start timestamp, tags string"
+
+    def joined(pdf):
+        return pd.DataFrame(
+            {
+                "key": [pdf["key"].iloc[0]],
+                "window_start": [pdf["window_start"].iloc[0]],
+                "tags": ["-".join(sorted(pdf["tag"]))],
+            }
+        )
+
+    def run_once():
+        flow = Dataflow("win_recov")
+        df = spark.readStream.schema(schema).parquet(str(src))
+        ks = op.key_on("key", Stream(flow, "in", df), "k")
+        folded = win.fold_window(
+            "w", ks, win.EventClock("ts", timedelta(minutes=1)),
+            win.TumblingWindower(timedelta(minutes=10)), fold=joined, schema=out_schema,
+        )
+        q = (
+            folded.df.writeStream.format("parquet")
+            .option("path", out_dir)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        back = spark.read.schema(out_schema).parquet(out_dir)
+        return sorted((r["key"], r["window_start"].minute, r["tags"]) for r in back.collect())
+
+    ts = lambda m: datetime(2024, 1, 1, 0, m)  # noqa: E731
+    # [0, 10) opens and stays open: the watermark is 00:00
+    _write_batch(spark, str(src), [("a", ts(1), "x")], "w0", schema)
+    assert run_once() == []
+
+    # after the restart a row joins the restored window and 00:30 moves
+    # the watermark past its end
+    _write_batch(spark, str(src), [("a", ts(2), "y"), ("a", ts(30), "z")], "w1", schema)
+    assert run_once() == [("a", 0, "x-y")]

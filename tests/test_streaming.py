@@ -5,7 +5,7 @@ stateful_batch primitive under availableNow micro-batch execution
 from __future__ import annotations
 
 import tempfile
-from datetime import datetime, timedelta
+from datetime import datetime, timedelta, timezone
 
 import pandas as pd
 import pytest
@@ -18,10 +18,6 @@ from bytewax_spark.run import run_main
 from bytewax_spark.sinks import MemorySink
 from bytewax_spark.sources import TestingSource
 from bytewax_spark.streaming import StatefulBatchLogic, stateful_batch
-
-# every test here drives real microbatch streaming executions (7-35 s
-# each); the module is the bulk of the suite's wall time
-pytestmark = pytest.mark.slow
 
 
 def drain(spark, flow, name, **trigger):
@@ -866,6 +862,65 @@ def test_stateful_batch_event_time_timer(spark):
         q.stop()
     # all 4 rows were buffered before the watermark passed base+30s
     assert got == [("a", 4)]
+
+
+def test_stateful_batch_event_timer_below_watermark_fires_now(spark):
+    """A notify_at already at or below the watermark when it is armed
+    (here a late batch's minimum event time) runs on_notify in the same
+    call: Spark cannot arm that timer (INVALID_TIMEOUT_TIMESTAMP)."""
+    from bytewax_spark.dataflow import Stream
+
+    base = datetime(2024, 1, 1)
+
+    class FlushAtBatchMin(StatefulBatchLogic):
+        def __init__(self, snap):
+            self.n, self.at = snap or (0, None)
+
+        def on_batch(self, pdf):
+            self.n += len(pdf)
+            self.at = pdf["ts"].min().to_pydatetime()
+            return None, self.RETAIN
+
+        def on_notify(self):
+            return pd.DataFrame({"n": [self.n]}), self.DISCARD
+
+        def notify_at(self):
+            return self.at
+
+        def snapshot(self):
+            return (self.n, self.at)
+
+    flow = Dataflow("s_evt_past")
+    # batch 1 (100 s, 110 s) moves the watermark to 100 s; batch 2's row
+    # at 50 s arms a timer 50 s below it
+    rows = [("a", base + timedelta(seconds=s)) for s in (100, 110, 50)]
+    src = TestingSource(rows, schema="k string, ts timestamp", streaming=True, files=2)
+    wm = Stream(flow, "wm", op.input("in", flow, src).df.withWatermark("ts", "10 seconds"))
+    out = stateful_batch(
+        "flush", op.key_on("key", wm, "k"), FlushAtBatchMin, schema="key string, n long", timers="event"
+    )
+    op.output("out", out, MemorySink("s_evt_past_out"))
+    got = [(r["key"], r["n"]) for r in drain(spark, flow, "s_evt_past_out")]
+    assert got == [("a", 3)]
+
+
+def test_driver_reads_naive_notify_at_as_utc(monkeypatch):
+    """The session time zone is UTC, so a naive notify_at datetime is
+    UTC wall time, whatever the worker's local zone."""
+    import time
+
+    from bytewax_spark.streaming import _epoch_ms
+
+    monkeypatch.setenv("TZ", "Asia/Tokyo")
+    time.tzset()
+    try:
+        naive = datetime(2024, 1, 1)
+        assert int(naive.timestamp() * 1000) != 1_704_067_200_000  # local zone is really +09:00
+        assert _epoch_ms(naive) == 1_704_067_200_000
+        assert _epoch_ms(datetime(2024, 1, 1, 9, tzinfo=timezone(timedelta(hours=9)))) == 1_704_067_200_000
+    finally:
+        monkeypatch.undo()
+        time.tzset()
 
 
 # ---------------------------------------------------------------------------

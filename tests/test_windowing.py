@@ -314,10 +314,10 @@ def test_session_window_late_split(spark):
     assert meta == {(0, ()), (1, ())}
 
 
-def test_streaming_fold_window_drops_late_rows(spark, tmp_path):
-    """A file replayed after the watermark passed its windows: its rows
-    are dropped, not armed as timers below the watermark (which fails
-    the query), and a window still buffered emits once, without them."""
+def _late_backlog_fold(spark, tmp_path, windower, name):
+    """Drain a backlog whose third file is replayed after the watermark
+    passed its rows through a streaming custom fold of ``windower``;
+    returns sorted (key, window_start minute, joined tags)."""
     watched = tmp_path / "in"
     watched.mkdir()
     backlog = [
@@ -342,7 +342,7 @@ def test_streaming_fold_window_drops_late_rows(spark, tmp_path):
             }
         )
 
-    flow = Dataflow("late_fold")
+    flow = Dataflow(name)
     df = (
         spark.readStream.schema("k string, ts timestamp, tag string")
         .option("maxFilesPerTrigger", 1)
@@ -350,12 +350,27 @@ def test_streaming_fold_window_drops_late_rows(spark, tmp_path):
     )
     ks = op.key_on("key", Stream(flow, "in", df), "k")
     folded = win.fold_window(
-        "w", ks, win.EventClock("ts", timedelta(minutes=1)), win.TumblingWindower(timedelta(minutes=10)),
+        "w", ks, win.EventClock("ts", timedelta(minutes=1)), windower,
         fold=joined, schema="key string, window_start timestamp, tags string",
     )
-    op.output("out", folded, MemorySink("late_fold_out"))
+    op.output("out", folded, MemorySink(f"{name}_out"))
     run_main(flow, checkpoint=str(tmp_path / "ckpt"), availableNow=True)
-    got = sorted(
-        (r["key"], r["window_start"].minute, r["tags"]) for r in spark.sql("SELECT * FROM late_fold_out").collect()
+    return sorted(
+        (r["key"], r["window_start"].minute, r["tags"]) for r in spark.sql(f"SELECT * FROM {name}_out").collect()
     )
+
+
+def test_streaming_fold_window_drops_late_rows(spark, tmp_path):
+    """A file replayed after the watermark passed its windows: its rows
+    are dropped, not armed as timers below the watermark (which fails
+    the query), and a window still buffered emits once, without them."""
+    got = _late_backlog_fold(spark, tmp_path, win.TumblingWindower(timedelta(minutes=10)), "late_fold")
     assert got == [("a", 0, "a05"), ("a", 50, "a50")]
+
+
+def test_streaming_session_fold_drops_late_rows(spark, tmp_path):
+    """The same backlog through a session fold: rows below the watermark
+    are late (the reference's ``LATE_SESSION_ID``) and never open a
+    session of their own."""
+    got = _late_backlog_fold(spark, tmp_path, win.SessionWindower(timedelta(minutes=10)), "late_sess")
+    assert got == [("a", 5, "a05"), ("a", 50, "a50")]
