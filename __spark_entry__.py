@@ -1077,10 +1077,8 @@ def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bytewax_spark.functions import dedup as dd
 
     emb = _t(spark, sf_dir, "embeddings")
-    # 10 distinct labels << shuffle partitions: slice the quadratic
-    # per-block pair work (see embedding_cosine_pairs docstring)
     return dd.embedding_cosine_pairs(
-        emb, "embedding", "vec_id", "label", threshold=0.35, n_slices=8
+        emb, "embedding", "vec_id", "label", threshold=0.35
     )
 
 
@@ -1751,9 +1749,8 @@ def winnow_fingerprints_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MOSS winnowing fingerprints (functions/text.py
     winnow_fingerprints, SIGMOD'03): per-doc windowed-min k-gram
     hashes, position-aware — any shared substring of window+k-1 chars
-    is guaranteed to collide. Codegen md5 over exploded gram rows +
-    one windowed min per doc; see the function docstring for why the
-    zero-shuffle array-lambda formulation loses."""
+    is guaranteed to collide. One shuffle-free mapInArrow kernel per
+    partition: grams → md5 → packed sliding min → per-doc distinct."""
     from bytewax_spark.functions import text as tx
 
     docs = _t(spark, sf_dir, "documents")
@@ -1813,10 +1810,7 @@ def semdedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bytewax_spark.functions import dedup as dd
 
     emb = _t(spark, sf_dir, "embeddings")
-    # 10 distinct labels << shuffle partitions: n_slices=8 spreads each
-    # cell's quadratic pair work over 80 (slice, cell) keys — the pair
-    # SET is unchanged, only its distribution
-    out = dd.semdedup(emb, "embedding", "vec_id", "label", threshold=0.35, n_slices=8)
+    out = dd.semdedup(emb, "embedding", "vec_id", "label", threshold=0.35)
     return out.select("vec_id", "label")
 
 
@@ -8509,11 +8503,8 @@ def knn_label_agreement_lsh_embeddings(spark: SparkSession, sf_dir: str) -> Data
     shuffle on the bucket key into a per-bucket Arrow kernel (numpy
     dense cosine matrix + top-k cut; rows ship once per bucket, only
     5-column verdict rows return) — never a broadcast nested loop
-    over the corpus. The kernel is the measured-faster default (7x
-    vs the pure-JVM join: Spark's higher-order array functions
-    evaluate interpreted); impl="sql" keeps the expression plan and
-    a parity test asserts identical rows. The brute-force variant
-    stays the QA-sample path; this is the 100 TB path."""
+    over the corpus. The brute-force variant stays the QA-sample
+    path; this is the 100 TB path."""
     from bytewax_spark.functions import similarity as sim
 
     emb = _t(spark, sf_dir, "embeddings")

@@ -19,8 +19,8 @@ Public surface mirrors the reference's module layout
 - :mod:`bytewax_spark.sources` / :mod:`bytewax_spark.sinks` —
   partitioned sources/sinks (parquet, csv, files, memory, kafka).
 - :mod:`bytewax_spark.streaming` — the Structured Streaming execution
-  path (stateful core on ``applyInPandasWithState`` /
-  ``transformWithStateInPandas``).
+  path (one keyed-stateful driver, ``stateful_batch``, on
+  ``applyInPandasWithState``).
 - :mod:`bytewax_spark.functions` — beyond-reference analytics: dedup
   (exact / MinHash-LSH / SimHash / n-gram Jaccard / embedding),
   similarity search, text analysis, multimodal column plumbing.

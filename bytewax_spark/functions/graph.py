@@ -582,7 +582,6 @@ def common_neighbors(
     dst: str = "id_b",
     min_common: int = 2,
     max_degree: int | None = None,
-    n_slices: int = 1,
 ) -> DataFrame:
     """Link prediction by common neighbors (Liben-Nowell & Kleinberg
     2003, public): for every NON-adjacent pair at distance 2, the
@@ -621,15 +620,12 @@ def common_neighbors(
     middle-key exchange. The pair stream is pre-repartitioned on the
     pair key: its dedup factor is near 1, so the map-side partial agg
     cannot shrink the shuffle and hashing raw pairs straight to their
-    reducer keeps the partial pass same-stage. ``n_slices`` is
-    retained for API compatibility; slicing is a no-op now.
+    reducer keeps the partial pass same-stage.
 
     Integer ids take the :func:`_pair_suffix_agg_arrow` numpy
     sort-aggregation in place of the post-exchange ``explode →
     HashAggregate`` (value-identical, ~6x smaller per-task state, ids
     out as ``long``); any other id type keeps that SQL shape."""
-    if n_slices < 1:
-        raise ValueError(f"n_slices must be >= 1, got {n_slices}")
     sym = (
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("u"),
@@ -717,7 +713,6 @@ def adamic_adar(
     dst: str = "id_b",
     min_score_micro: int = 1,
     max_degree: int | None = None,
-    n_slices: int = 1,
 ) -> DataFrame:
     """Adamic-Adar link prediction (Adamic & Adar 2003, public):
     common neighbors weighted by 1/ln(degree) — a shared RARE neighbor
@@ -751,13 +746,9 @@ def adamic_adar(
     an adjacent pair is dropped by one filter with no separate join
     stage, no edge-side shuffle at corpus scale, and no second pass
     over the adjacency aggregate.
-    ``n_slices`` is retained for API compatibility; the explicit
-    repartition pins parallelism, so slicing is a no-op.
 
     Integer ids take the :func:`_pair_suffix_agg_arrow` kernel, as in
     :func:`common_neighbors`; any other id type keeps the SQL shape."""
-    if n_slices < 1:
-        raise ValueError(f"n_slices must be >= 1, got {n_slices}")
     sym = (
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("u"),

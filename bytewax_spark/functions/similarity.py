@@ -36,6 +36,7 @@ __all__ = [
     "ivf_search_index",
     "ivf_write_index",
     "knn_label_agreement",
+    "knn_label_agreement_lsh",
     "ranking_eval",
     "lsh_bucket_col",
     "lsh_buckets",
@@ -152,7 +153,6 @@ def cosine_topk_batch(
     k: int = 10,
     fanout: int = 16,
     exclude_same_id: bool = False,
-    impl: str = "arrow",
 ) -> DataFrame:
     """(probe_id, id, cosine) — exact top-k neighbors for EVERY probe
     in one corpus pass. ``cosine_topk`` launches one TakeOrdered job
@@ -166,113 +166,45 @@ def cosine_topk_batch(
     1.0 the (cosine desc, id asc) tiebreak can push the self row out
     of a top-(k+1) fetch and leave k+1 survivors.
 
-    Scale shape: the probe table broadcasts (it is the small side by
-    definition — a query batch, not a corpus) and expands each corpus
-    row Q ways via a broadcast nested-loop — deliberate and map-local,
-    the one join shape where BroadcastNestedLoopJoin is the right
-    plan. The expansion projects straight down to skinny (probe_id,
-    id, cosine) rows before anything shuffles, and per-probe top-k is
-    ``topk.top_k_per_group`` — the two-phase skew-proof rank, so even
-    with Q=1 (one giant 'group') no single task sorts Q×N rows.
-    Result is EXACTLY per-probe top-k under (cosine desc, id asc).
+    A probe or corpus row whose vector is NULL or has zero norm has no
+    cosine: it is dropped before scoring.
 
-    Two implementations, identical rows (parity test in
-    tests/test_ml_prep.py): ``impl="arrow"`` (default) pulls the probe
-    batch to the driver ONCE (same memory class as the JVM path's
-    ``F.broadcast(q)`` — the probe batch is small by contract; a
-    512 MB guard raises with advice before an oversized pull), ships
-    it to executors as a broadcast numpy matrix, and scans the corpus
-    with ``mapInPandas``: each Arrow batch computes the dense
-    probes x batch cosine matrix (rounded to 6 dp BEFORE ranking) and
-    emits only its per-probe partial top-k — exact, because every
-    global top-k row is in its own batch's top-k. ``impl="sql"``
-    keeps the pure-JVM broadcast-nested-loop expression plan. The
-    kernel is default for the same reason as
-    :func:`knn_label_agreement_lsh`: Spark's higher-order array
-    functions evaluate interpreted (~17 us per 64-dim cosine), so the
-    expression plan pays ~7x more wall time for the same pairs."""
-    from .topk import top_k_per_group
-
-    if impl == "arrow":
-        scored = _cosine_scatter_topk_arrow(
-            df, vec_col, id_col, probes, probe_id_col, probe_vec_col,
-            k, exclude_same_id,
-        )
-        return top_k_per_group(
-            scored, "probe_id", [F.col("cosine").desc()], id_col, k, fanout
-        )
-    if impl != "sql":
-        raise ValueError(f"impl must be 'arrow' or 'sql', got {impl!r}")
-    q = probes.select(
-        F.col(probe_id_col).alias("probe_id"),
-        as_double(probe_vec_col).alias("_pv"),
-    )
-    v = as_double(vec_col)
-    scored = (
-        df.join(F.broadcast(q))
-        .select(
-            "probe_id",
-            F.col(id_col),
-            F.round(cosine(v, F.col("_pv")), 6).alias("cosine"),
-        )
-    )
-    if exclude_same_id:
-        scored = scored.filter(F.col("probe_id") != F.col(id_col))
-    return top_k_per_group(
-        scored, "probe_id", [F.col("cosine").desc()], id_col, k, fanout
-    )
-
-
-_PROBE_PULL_CAP_BYTES = 512 * 1024 * 1024
-
-# max bytes of float64 a pair-stage kernel may materialize as ONE dense
-# cosine block: kernels chunk their matrix into row blocks of
-# <= this size so a degenerate bucket/block (mass-duplicate vectors all
-# hashing together) costs quadratic TIME but can never OOM a task with
-# a quadratic ALLOCATION. Module-level so tests can shrink it and drive
-# the multi-block path on small corpora.
-_KERNEL_BLOCK_BYTES = 64 * 1024 * 1024
-
-
-def _cosine_scatter_topk_arrow(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    probes: DataFrame,
-    probe_id_col: str,
-    probe_vec_col: str,
-    k: int,
-    exclude_same_id: bool,
-) -> DataFrame:
-    """(probe_id, id, cosine) per-batch partial top-k via a broadcast
-    probe matrix + ``mapInPandas`` corpus scan. The caller composes
-    the exact global cut with ``top_k_per_group``."""
+    Scale shape: the probe batch is pulled to the driver ONCE (small
+    by contract — a query batch, not a corpus; a 512 MB guard raises
+    with advice before an oversized pull) and ships to executors as a
+    broadcast numpy matrix. The corpus is scanned with
+    ``mapInPandas``: each Arrow batch computes the dense probes x
+    batch cosine matrix (rounded to 6 dp BEFORE ranking) and emits
+    only its per-probe partial top-k — exact, because every global
+    top-k row is in its own batch's top-k. A numpy kernel rather than
+    a broadcast nested-loop expression plan because Spark's
+    higher-order array functions evaluate interpreted (~17 us per
+    64-dim cosine, ~7x the wall time for the same pairs). The partial
+    rows are skinny (probe_id, id, cosine), and the global per-probe
+    cut is ``topk.top_k_per_group`` — the two-phase skew-proof rank,
+    so even with one probe no single task sorts every candidate.
+    Result is EXACTLY per-probe top-k under (cosine desc, id asc)."""
     import numpy as np
     import pandas as pd
 
-    pr = probes.select(
-        F.col(probe_id_col).alias("probe_id"),
-        as_double(probe_vec_col).alias("_pv"),
-    ).toPandas()
-    n_probes = len(pr)
-    dims = len(pr["_pv"].iloc[0]) if n_probes else 0
-    if n_probes * dims * 8 > _PROBE_PULL_CAP_BYTES:
+    from .topk import top_k_per_group
+
+    pr, pmat, pnorm = _scorable_rows(
+        probes.select(
+            F.col(probe_id_col).alias("probe_id"),
+            as_double(probe_vec_col).alias("_v"),
+        ).toPandas()
+    )
+    if pmat.size * 8 > _PROBE_PULL_CAP_BYTES:
         raise ValueError(
-            f"probe batch ({n_probes} x {dims} doubles) exceeds the "
-            "512 MB scatter cap - audit a sample, use impl='sql', or "
-            "bucket with knn_label_agreement_lsh at corpus scale"
+            f"probe batch ({pmat.shape[0]} x {pmat.shape[1]} doubles) "
+            "exceeds the 512 MB scatter cap - audit a sample, or bucket "
+            "with knn_label_agreement_lsh at corpus scale"
         )
     pids = pr["probe_id"].to_numpy()
-    pmat = (
-        np.stack(pr["_pv"].to_numpy()).astype(np.float64)
-        if n_probes
-        else np.zeros((0, 0))
-    )
-    pnorm = np.sqrt((pmat * pmat).sum(axis=1)) if n_probes else pmat
     bc = df.sparkSession.sparkContext.broadcast((pids, pmat, pnorm))
     # output id types DERIVE from the input schemas (a hardcoded
-    # `long` here silently broke every caller with string ids the
-    # moment arrow became the default path)
+    # `long` here silently broke every caller with string ids)
     pid_dt = probes.schema[probe_id_col].dataType.simpleString()
     id_dt = df.schema[id_col].dataType.simpleString()
     schema = f"probe_id {pid_dt}, {id_col} {id_dt}, cosine double"
@@ -280,12 +212,11 @@ def _cosine_scatter_topk_arrow(
     def gen(batches):
         b_pids, b_pmat, b_pnorm = bc.value
         for pdf in batches:
+            pdf, v, vnorm = _scorable_rows(pdf)
             n = len(pdf)
             if n == 0 or len(b_pids) == 0:
                 continue
             ids = pdf[id_col].to_numpy()
-            v = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
-            vnorm = np.sqrt((v * v).sum(axis=1))
             cmat = round6_half_up(
                 (b_pmat @ v.T) / np.outer(b_pnorm, vnorm)
             )
@@ -305,7 +236,39 @@ def _cosine_scatter_topk_arrow(
             )
 
     src = df.select(F.col(id_col), as_double(vec_col).alias("_v"))
-    return src.mapInPandas(gen, schema)
+    scored = src.mapInPandas(gen, schema)
+    return top_k_per_group(
+        scored, "probe_id", [F.col("cosine").desc()], id_col, k, fanout
+    )
+
+
+_PROBE_PULL_CAP_BYTES = 512 * 1024 * 1024
+
+# max bytes of float64 a pair-stage kernel may materialize as ONE dense
+# cosine block: kernels chunk their matrix into row blocks of
+# <= this size so a degenerate bucket/block (mass-duplicate vectors all
+# hashing together) costs quadratic TIME but can never OOM a task with
+# a quadratic ALLOCATION. Module-level so tests can shrink it and drive
+# the multi-block path on small corpora.
+_KERNEL_BLOCK_BYTES = 64 * 1024 * 1024
+
+
+def _scorable_rows(pdf: "pd.DataFrame"):
+    """``(rows, matrix, norms)``: the rows of ``pdf`` whose ``_v``
+    vector has a cosine, those vectors as a float64 matrix, and the
+    matrix's row norms. A NULL or zero-norm vector has no cosine, so
+    every kernel drops it here, before scoring."""
+    import numpy as np
+
+    pdf = pdf[pdf["_v"].notna()]
+    v = (
+        np.stack(pdf["_v"].to_numpy()).astype(np.float64)
+        if len(pdf)
+        else np.zeros((0, 0))
+    )
+    norms = np.sqrt((v * v).sum(axis=1))
+    keep = norms > 0
+    return pdf[keep], v[keep], norms[keep]
 
 
 def hard_negatives(
@@ -841,8 +804,6 @@ def knn_label_agreement_lsh(
     n_planes: int = 8,
     dims: int | None = None,
     seed: int = 42,
-    fanout: int = 16,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Corpus-scale kNN label-noise screen — the LSH-bucketed path the
     brute-force :func:`knn_label_agreement` docstring mandates at
@@ -855,109 +816,28 @@ def knn_label_agreement_lsh(
     are unseen, and a bucket smaller than k+1 yields n_nbrs < k
     (singleton-bucket rows emit no row at all — no neighbors, no
     verdict). Size ``n_planes`` with :func:`adaptive_n_planes` so
-    expected bucket size stays constant as the corpus grows.
+    expected bucket size stays constant as the corpus grows. A row
+    whose vector is NULL or has zero norm has no cosine: it is dropped
+    before scoring, so it is neither audited nor anyone's neighbor.
 
-    Two implementations, bit-identical outputs (asserted in
-    tests/test_ml_prep.py): ``impl="arrow"`` (default) groups
-    by bucket and runs ONE ``applyInPandas`` kernel per bucket — the
-    bucket's vectors arrive once, numpy does the dense B×B cosine
-    matrix and the per-probe top-k cut, and only the 5-column verdict
-    rows come back. ``impl="sql"`` is the pure-JVM expression plan
-    (bucket equi self-join → per-pair ``zip_with``/``aggregate``
-    cosine → two-phase rank). The kernel is the default because
-    Spark's higher-order array functions do NOT participate in
-    whole-stage codegen — they evaluate interpreted, ~17 µs per
-    64-dim cosine measured, so the join shape pays 7× more wall time
-    producing the SAME pairs (7.6 s vs 1.1 s at sf0.1; an unrolled
-    element_at sum was worse still — the 64-term expression tree
-    overflows JIT method limits). Both paths rank by the ROUNDED
-    (6 dp) cosine with id ascending as the tie-break, so an external
-    SQL oracle reproduces the selection exactly.
+    Scale shape: ONE shuffle on the bucket key (never a broadcast
+    nested loop over the corpus) into one ``applyInPandas`` kernel per
+    bucket — the bucket's vectors arrive once, numpy computes the
+    cosine matrix (float64, rounded to 6 dp before ranking) and the
+    per-probe top-k cut by (rounded cosine desc, id asc) excluding
+    self, and only the 5-column verdict rows come back. An external
+    SQL oracle reproduces the selection exactly. A numpy kernel rather
+    than a bucket self-join because Spark's higher-order array
+    functions do not participate in whole-stage codegen — ~17 µs per
+    64-dim cosine interpreted, 7× the wall time for the same pairs.
+    Per-bucket cost is quadratic in bucket size — bounded by plane
+    count; size planes so buckets stay O(100-1000) rows.
 
-    Scale shape (either impl): ONE shuffle on the bucket key (never a
-    broadcast nested loop over the corpus), per-bucket cost quadratic
-    in bucket size — bounded by plane count; size planes so buckets
-    stay O(100-1000) rows and the kernel's B×B matrix stays a few MB.
-    ``fanout`` only affects ``impl="sql"``'s two-phase rank; the
-    kernel cuts top-k inside its bucket and needs no subbucketing."""
-    if impl == "arrow":
-        return _knn_lsh_arrow(
-            df, vec_col, id_col, label_col, k, n_planes, dims, seed
-        )
-    if impl != "sql":
-        raise ValueError(f"impl must be 'arrow' or 'sql', got {impl!r}")
-    b = df.select(
-        F.col(id_col),
-        F.col(label_col),
-        as_double(vec_col).alias("_v"),
-        lsh_bucket_col(vec_col, n_planes, dims, seed).alias("_b"),
-    )
-    left = b.select(
-        F.col(id_col).alias("_pid"),
-        F.col(label_col).alias("_plab"),
-        F.col("_v").alias("_pv"),
-        "_b",
-    )
-    right = b.select(
-        F.col(id_col).alias("_nid"),
-        F.col(label_col).alias("_nlab"),
-        F.col("_v").alias("_nv"),
-        "_b",
-    )
-    cand = (
-        left.join(right, "_b")
-        .filter(F.col("_pid") != F.col("_nid"))
-        .select(
-            "_pid",
-            "_plab",
-            "_nid",
-            "_nlab",
-            F.round(cosine(F.col("_pv"), F.col("_nv")), 6).alias("cosine"),
-        )
-    )
-    from .topk import top_k_per_group
-
-    top = top_k_per_group(
-        cand, "_pid", [F.col("cosine").desc()], "_nid", k, fanout
-    )
-    return (
-        top.groupBy(
-            F.col("_pid").alias(id_col), F.col("_plab").alias(label_col)
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_nbrs"),
-            F.sum((F.col("_nlab") == F.col("_plab")).cast("long")).alias(
-                "n_same"
-            ),
-        )
-        .withColumn("agree_ppm", F.expr("(n_same * 1000000L) div n_nbrs"))
-    )
-
-
-def _knn_lsh_arrow(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    label_col: str,
-    k: int,
-    n_planes: int,
-    dims: int | None,
-    seed: int,
-) -> DataFrame:
-    """Per-bucket Arrow kernel for :func:`knn_label_agreement_lsh`:
-    each bucket's rows ship ONCE into pandas, numpy computes the
-    cosine matrix (float64, rounded to 6 dp before ranking so
-    ordering is engine-exact), and per-probe neighbors are the top-k
-    by (rounded cosine desc, id asc) excluding self. Buckets smaller
-    than 2 emit nothing (no neighbors, no verdict).
-
-    Skew guard: the cosine matrix is computed in ROW BLOCKS sized so
-    one block is <= ~64 MB of float64 — a degenerate bucket (e.g. a
-    corpus of mass-duplicate vectors hashing into one bucket) costs
-    O(n^2) TIME by definition, but never materializes an O(n^2) dense
-    matrix in a single task, so it degrades instead of OOMing the
-    executor. Each probe's top-k needs only its own row of cosines,
-    so block results are exact, not approximate."""
+    Skew guard: the cosine matrix is computed in ROW BLOCKS of
+    <= ~64 MB of float64 — a degenerate bucket (e.g. mass-duplicate
+    vectors hashing together) costs O(n^2) TIME but never materializes
+    an O(n^2) dense matrix in a single task. Each probe's top-k needs
+    only its own row of cosines, so block results are exact."""
     import numpy as np
     import pandas as pd
 
@@ -971,13 +851,12 @@ def _knn_lsh_arrow(
     block_bytes = _KERNEL_BLOCK_BYTES  # bind by value: closure ships to executors
 
     def kernel(pdf: "pd.DataFrame") -> "pd.DataFrame":
+        pdf, v, norms = _scorable_rows(pdf)
         n = len(pdf)
         if n < 2:
             return pd.DataFrame({c: pd.Series(dtype="object") for c in cols})
         ids = pdf[id_col].to_numpy()
         labs = pdf[label_col].to_numpy()
-        v = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
-        norms = np.sqrt((v * v).sum(axis=1))
         blk = max(1, min(n, block_bytes // (n * 8)))
         rows = []
         for s in range(0, n, blk):
@@ -1006,7 +885,7 @@ def _knn_lsh_arrow(
         as_double(vec_col).alias("_v"),
         lsh_bucket_col(vec_col, n_planes, dims, seed).alias("_b"),
     )
-    # pin the kernel stage's fan-out (see _embedding_cosine_pairs_arrow:
+    # pin the kernel stage's fan-out (see dedup.embedding_cosine_pairs:
     # AQE coalesces the small bucket shuffle; per-task cost is
     # quadratic per bucket, so coalescing serializes the kernels); the
     # explicit-count HashPartitioning satisfies applyInPandas'

@@ -204,17 +204,32 @@ def fingerprint(c: Column | str) -> Column:
     return hash64(canon)
 
 
-def _winnow_arrow(df, text_col: str, id_col: str, k: int, window: int):
-    """Arrow kernel for :func:`winnow_fingerprints` — the whole
-    windowed-argmin is per-document, so it runs shuffle-FREE as one
-    ``mapInArrow`` over (id, text): scan → kernel, zero Exchange (the
-    SQL shape pays one full gram-row exchange + sort for the window
-    plus nothing else). Values are bit-identical by construction:
-    md5-first-10-hex == first 5 digest bytes big-endian, the packed
-    ``hash*2^20+pos`` int64s and the width-``window`` sliding minimum
-    are replayed in numpy, and the per-doc ``np.unique`` equals the
-    global distinct because ``pos`` packing makes duplicates
-    impossible across documents."""
+def winnow_fingerprints(df, text_col: str, id_col: str, k: int = 5, window: int = 4):
+    """Winnowing document fingerprints (Schleimer et al., SIGMOD'03 —
+    the MOSS plagiarism-detection algorithm, public): hash every
+    ``k``-char gram, slide a ``window`` over the hash sequence, keep
+    each window's minimum → a compact, position-aware fingerprint set
+    that two documents share iff they share a sufficiently long
+    substring. Guarantees: any match ≥ window+k-1 chars is caught.
+
+    Returns ``(id, fp, pos)`` rows — the distinct selected
+    fingerprints with their 0-based gram offsets. The windowed argmin
+    runs on PACKED ``hash40 * 2^20 + pos`` int64s (``hash40`` = the
+    first 10 hex digits of the gram's md5), so ties break to the
+    leftmost position and an external SQL oracle reproduces every
+    selection bit-for-bit; documents must stay under 2^20 grams (1M
+    chars — chunk longer docs first). Grams are sliced by code point,
+    as Spark ``substr`` does. A document with fewer than ``window``
+    grams keeps its single minimum; one with no gram emits nothing.
+
+    Shape: the winnow is per-document, so one ``mapInArrow`` kernel
+    does grams → md5 → packed sliding minimum → per-doc distinct with
+    ZERO shuffles (the per-doc ``np.unique`` equals a global distinct
+    because ``pos`` packing makes duplicates impossible across
+    documents). A row-based plan pays a full gram-row exchange + sort
+    to feed a window function; an array-lambda plan loses worse —
+    higher-order lambdas don't codegen, and Catalyst inlines the md5
+    transform once per window branch."""
     import pyarrow as pa
 
     from ..io import ensure_min_partitions
@@ -280,82 +295,6 @@ def _winnow_arrow(df, text_col: str, id_col: str, k: int, window: int):
                 )
 
     return src.mapInArrow(gen, f"{id_col} {id_type}, fp bigint, pos bigint")
-
-
-def winnow_fingerprints(
-    df, text_col: str, id_col: str, k: int = 5, window: int = 4,
-    impl: str = "arrow",
-):
-    """Winnowing document fingerprints (Schleimer et al., SIGMOD'03 —
-    the MOSS plagiarism-detection algorithm, public): hash every
-    ``k``-char gram, slide a ``window`` over the hash sequence, keep
-    each window's minimum → a compact, position-aware fingerprint set
-    that two documents share iff they share a sufficiently long
-    substring. Guarantees: any match ≥ window+k-1 chars is caught.
-
-    Returns ``(id, fp, pos)`` rows — the distinct selected
-    fingerprints with their 0-based gram offsets. The windowed argmin
-    runs on PACKED ``hash40 * 2^20 + pos`` int64s, so ties break to
-    the leftmost position and an external SQL oracle reproduces every
-    selection bit-for-bit; documents must stay under 2^20 grams (1M
-    chars — chunk longer docs first).
-
-    Shape, deliberately ROW-based: grams explode to (id, pos, packed)
-    rows with the md5 in a plain projection (whole-stage codegen),
-    then one windowed ``min`` over the next ``window`` rows per doc
-    and a distinct. Costs one shuffle of 16-byte gram rows — the same
-    posture as the shingle pipelines. The tempting array-only
-    formulation (transform + slice/zip_with lambdas, zero shuffle)
-    loses badly: higher-order lambdas don't codegen, and any explode
-    of the result collapses the projection into the Generate where the
-    md5 transform gets inlined per window branch (23 copies measured,
-    ~60x slower) — Catalyst does no cross-lambda CSE.
-
-    ``impl="arrow"`` (default since r7; parity-tested vs the SQL plan
-    in tests/test_retrieval.py): the winnow is per-document, so one
-    ``mapInArrow`` kernel does grams → md5 → packed sliding min →
-    per-doc distinct with ZERO shuffles (the SQL shape's only real
-    cost beyond the per-gram md5 is the full gram-row exchange + sort
-    feeding the window — deleted outright). ``impl="sql"`` keeps the
-    pure-JVM plan for engines without Python workers."""
-    if impl == "arrow":
-        return _winnow_arrow(df, text_col, id_col, k, window)
-    if impl != "sql":
-        raise ValueError(f"impl must be arrow|sql, got {impl!r}")
-    from pyspark.sql import Window
-
-    # gram count as a LENGTH formula, not size(char_ngrams(...)): the
-    # optimizer pushes this projection below the Generate, where a
-    # size-of-transform expression would replay the whole gram array
-    # once per exploded row — O(grams²) per doc (measured: turns a
-    # 2 s scan into minutes at sf0.01)
-    m = F.greatest(F.length(text_col) - (k - 1), F.lit(0))
-    grams = df.select(
-        F.col(id_col),
-        m.alias("_m"),
-        F.posexplode(char_ngrams(text_col, k)).alias("_pos", "_g"),
-    )
-    packed = grams.select(
-        id_col,
-        "_m",
-        "_pos",
-        (
-            F.conv(F.substring(F.md5("_g"), 1, 10), 16, 10).cast("bigint")
-            * F.lit(1 << 20)
-            + F.col("_pos")
-        ).alias("_p"),
-    )
-    w = Window.partitionBy(id_col).orderBy("_pos").rowsBetween(0, window - 1)
-    return (
-        packed.withColumn("_win", F.min("_p").over(w))
-        .filter(F.col("_pos") <= F.greatest(F.col("_m") - window, F.lit(0)))
-        .select(
-            id_col,
-            F.floor(F.col("_win") / (1 << 20)).cast("long").alias("fp"),
-            F.pmod(F.col("_win"), F.lit(1 << 20)).cast("long").alias("pos"),
-        )
-        .distinct()
-    )
 
 
 # ---------------------------------------------------------------------------

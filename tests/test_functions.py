@@ -9,7 +9,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from bytewax_spark.functions import dedup, multimodal, similarity, text
+from tests import duckref
 from tests.conftest import load
+from tests.duckref import spark_rows
 
 
 def test_tokenize_and_counts(spark, sf_dir):
@@ -868,10 +870,10 @@ def test_normalize_text_nbsp_and_dashes(spark):
 
 
 def test_embedding_cosine_pairs_arrow_sql_parity(spark):
-    """The opt-in Arrow block kernel must reproduce the SQL plan's
-    pairs exactly — same id_a < id_b enumeration, same round-6-then-
-    threshold predicate, including boundary cosines from duplicate
-    vectors (exactly 1.0)."""
+    """The block kernel must reproduce DuckDB SQL's pairs exactly —
+    same id_a < id_b enumeration, same round-6-then-threshold
+    predicate, including boundary cosines from duplicate vectors
+    (exactly 1.0)."""
     import random
 
     rng = random.Random(5)
@@ -885,28 +887,20 @@ def test_embedding_cosine_pairs_arrow_sql_parity(spark):
         rows, "doc_id long, embedding array<float>, blk int"
     )
     for t in (0.5, 0.9):
-        a = {
-            tuple(r)
-            for r in dedup.embedding_cosine_pairs(
-                df, "embedding", "doc_id", "blk", threshold=t, impl="arrow"
-            ).collect()
-        }
-        b = {
-            tuple(r)
-            for r in dedup.embedding_cosine_pairs(
-                df, "embedding", "doc_id", "blk", threshold=t, impl="sql"
-            ).collect()
-        }
-        assert a == b, f"threshold={t}: arrow^sql diff {a ^ b}"
-    assert any(r[2] == 1.0 for r in a)
+        got = spark_rows(
+            dedup.embedding_cosine_pairs(df, "embedding", "doc_id", "blk", threshold=t)
+        )
+        assert got == duckref.embedding_pairs(df, "embedding", "doc_id", "blk", t), (
+            f"threshold={t}"
+        )
+    assert any(r[0] == "1.000000" for r in got[1])
 
 
 def test_embedding_cosine_pairs_null_blocks_dropped_both_impls(spark):
-    """Rows with a NULL block key must be DROPPED by both impls: the
-    SQL equi self-join can never match them, and the arrow path now
-    filters them before grouping (it used to collect all null-block
-    rows into one pandas group and emit pairs among them — a silent
-    parity break the non-null-only parity test never saw)."""
+    """Rows with a NULL block key belong to no block and must be
+    DROPPED, as DuckDB's equi self-join drops them (the kernel used to
+    collect all null-block rows into one pandas group and emit pairs
+    among them)."""
     rows = [
         (1, [1.0, 0.0], 0),
         (2, [0.99, 0.01], 0),
@@ -916,22 +910,39 @@ def test_embedding_cosine_pairs_null_blocks_dropped_both_impls(spark):
     df = spark.createDataFrame(
         rows, "doc_id long, embedding array<float>, blk int"
     )
-    for impl in ("arrow", "sql"):
-        got = {
-            (r["id_a"], r["id_b"])
-            for r in dedup.embedding_cosine_pairs(
-                df, "embedding", "doc_id", "blk", threshold=0.5, impl=impl
-            ).collect()
-        }
-        assert got == {(1, 2)}, f"impl={impl}: {got}"
+    got = spark_rows(
+        dedup.embedding_cosine_pairs(df, "embedding", "doc_id", "blk", threshold=0.5)
+    )
+    assert got == duckref.embedding_pairs(df, "embedding", "doc_id", "blk", 0.5)
+    assert [(r[1], r[2]) for r in got[1]] == [("1", "2")]
+
+
+def test_embedding_cosine_pairs_drops_null_and_zero_norm_vectors(spark):
+    """A NULL or zero-norm vector has no cosine: the row is dropped
+    before scoring instead of failing the kernel (NULL) or scoring NaN
+    (zero norm)."""
+    rows = [
+        (1, [1.0, 0.0, 0.0], 0),
+        (2, [0.9, 0.1, 0.0], 0),
+        (3, None, 0),
+        (4, [0.0, 0.0, 0.0], 0),
+        (5, [0.8, 0.2, 0.1], 0),
+    ]
+    df = spark.createDataFrame(
+        rows, "doc_id long, embedding array<float>, blk int"
+    )
+    got = spark_rows(
+        dedup.embedding_cosine_pairs(df, "embedding", "doc_id", "blk", threshold=0.5)
+    )
+    assert got == duckref.embedding_pairs(df, "embedding", "doc_id", "blk", 0.5)
+    assert len(got[1]) == 3
 
 
 def test_embedding_cosine_pairs_block_chunked_kernel_exact(spark, monkeypatch):
     """Skew guard: with the kernel's dense-matrix budget shrunk to a
     few rows per block, a mass-duplicate corpus (every vector
     identical, all in ONE block — the degenerate 100 TB case) must
-    produce exactly the same pair set as the unchunked SQL plan:
-    all C(n,2) pairs at cosine 1.0."""
+    produce exactly all C(n,2) pairs at cosine 1.0."""
     from bytewax_spark.functions import similarity as sim
 
     monkeypatch.setattr(sim, "_KERNEL_BLOCK_BYTES", 256)  # ~2 rows/block at n=16
@@ -943,7 +954,7 @@ def test_embedding_cosine_pairs_block_chunked_kernel_exact(spark, monkeypatch):
     got = {
         (r["id_a"], r["id_b"], r["cosine"])
         for r in dedup.embedding_cosine_pairs(
-            df, "embedding", "doc_id", "blk", threshold=0.9, impl="arrow"
+            df, "embedding", "doc_id", "blk", threshold=0.9
         ).collect()
     }
     want = {(a, b, 1.0) for a in range(n) for b in range(a + 1, n)}
@@ -951,11 +962,11 @@ def test_embedding_cosine_pairs_block_chunked_kernel_exact(spark, monkeypatch):
 
 
 def test_lsh_multiprobe_pairs_arrow_sql_parity(spark):
-    """The multiprobe probe x home Arrow kernel must reproduce the SQL
-    join plan's pairs exactly: same once-per-pair emission (probed
-    from the lower id), same round-6-then-threshold predicate,
-    including duplicate vectors (cosine exactly 1.0) and pairs split
-    across a single hyperplane boundary."""
+    """The multiprobe probe x home kernel must reproduce DuckDB SQL's
+    pairs exactly: buckets at hamming distance <= 1, once per pair,
+    round-6-then-threshold, including duplicate vectors (cosine
+    exactly 1.0) and pairs split across a single hyperplane
+    boundary."""
     import random
 
     rng = random.Random(17)
@@ -966,27 +977,18 @@ def test_lsh_multiprobe_pairs_arrow_sql_parity(spark):
     rows.append((300, list(rows[0][1])))  # exact duplicate vector
     df = spark.createDataFrame(rows, "doc_id long, embedding array<float>")
     kw = dict(dims=8, n_planes=3, threshold=0.4, seed=9, multiprobe=1)
-    a = {
-        tuple(r)
-        for r in dedup.lsh_cosine_pairs(
-            df, "embedding", "doc_id", impl="arrow", **kw
-        ).collect()
-    }
-    b = {
-        tuple(r)
-        for r in dedup.lsh_cosine_pairs(
-            df, "embedding", "doc_id", impl="sql", **kw
-        ).collect()
-    }
-    assert a == b, f"arrow^sql diff: {a ^ b}"
-    assert any(r[2] == 1.0 for r in a)
-    assert len(a) > 0
+    got = spark_rows(dedup.lsh_cosine_pairs(df, "embedding", "doc_id", **kw))
+    want = duckref.multiprobe_pairs(
+        duckref.with_bucket(df, 8, 3, 9), "embedding", "doc_id", "bucket", 0.4
+    )
+    assert got == want
+    assert any(r[0] == "1.000000" for r in got[1])
 
 
 def test_lsh_multiprobe_pairs_arrow_string_ids(spark):
     """The multiprobe kernel compares id arrays directly (the
-    id_probe < id_home mask), so non-numeric ids must survive: parity
-    with the SQL plan on string doc ids."""
+    id_probe < id_home mask), so non-numeric ids must survive: the
+    same pairs as DuckDB SQL on string doc ids."""
     import random
 
     rng = random.Random(5)
@@ -997,20 +999,35 @@ def test_lsh_multiprobe_pairs_arrow_string_ids(spark):
     rows.append(("d900", list(rows[0][1])))  # duplicate vector
     df = spark.createDataFrame(rows, "doc_id string, embedding array<float>")
     kw = dict(dims=6, n_planes=2, threshold=0.4, seed=3, multiprobe=1)
-    a = {
-        tuple(r)
-        for r in dedup.lsh_cosine_pairs(
-            df, "embedding", "doc_id", impl="arrow", **kw
-        ).collect()
-    }
-    b = {
-        tuple(r)
-        for r in dedup.lsh_cosine_pairs(
-            df, "embedding", "doc_id", impl="sql", **kw
-        ).collect()
-    }
-    assert a == b
-    assert all(isinstance(t[0], str) and isinstance(t[1], str) for t in a)
+    out = dedup.lsh_cosine_pairs(df, "embedding", "doc_id", **kw)
+    want = duckref.multiprobe_pairs(
+        duckref.with_bucket(df, 6, 2, 3), "embedding", "doc_id", "bucket", 0.4
+    )
+    assert spark_rows(out) == want
+    assert all(
+        isinstance(r["id_a"], str) and isinstance(r["id_b"], str)
+        for r in out.collect()
+    )
+
+
+def test_lsh_multiprobe_pairs_drops_null_and_zero_norm_vectors(spark):
+    """A NULL or zero-norm vector has no cosine: the multiprobe kernel
+    drops the row before scoring (a NULL vector used to fail it)."""
+    rows = [
+        (1, [1.0, 0.0, 0.0]),
+        (2, [0.9, 0.1, 0.0]),
+        (3, None),
+        (4, [0.0, 0.0, 0.0]),
+        (5, [0.8, 0.2, 0.1]),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, embedding array<float>")
+    kw = dict(dims=3, n_planes=2, threshold=0.5, seed=3, multiprobe=1)
+    got = spark_rows(dedup.lsh_cosine_pairs(df, "embedding", "doc_id", **kw))
+    want = duckref.multiprobe_pairs(
+        duckref.with_bucket(df, 3, 2, 3), "embedding", "doc_id", "bucket", 0.5
+    )
+    assert got == want
+    assert len(got[1]) > 0
 
 
 def test_minhash_lsh_recall_catches_identical_docs(spark):

@@ -7,6 +7,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from bytewax_spark.functions import sampling, stats
+from tests import duckref
+from tests.duckref import spark_rows
 
 
 def _inter(spark):
@@ -268,8 +270,7 @@ def test_knn_agreement_duplicate_vectors_keep_exactly_k_neighbors(spark):
 
 
 def test_knn_lsh_arrow_and_sql_impls_agree(spark):
-    """The Arrow bucket kernel and the pure-JVM expression plan are two
-    implementations of ONE contract — identical verdict rows on a
+    """The bucket kernel must return DuckDB SQL's verdict rows on a
     corpus with planted structure (clusters + a mislabeled point +
     buckets smaller than k+1)."""
     import random
@@ -287,20 +288,42 @@ def test_knn_lsh_arrow_and_sql_impls_agree(spark):
         rows, "vec_id long, embedding array<float>, label int"
     )
     kw = dict(k=5, n_planes=3, dims=4, seed=11)
-    arrow = {
-        tuple(r)
-        for r in knn_label_agreement_lsh(
-            df, "embedding", "vec_id", "label", impl="arrow", **kw
-        ).collect()
-    }
-    sql = {
-        tuple(r)
-        for r in knn_label_agreement_lsh(
-            df, "embedding", "vec_id", "label", impl="sql", **kw
-        ).collect()
-    }
-    assert arrow == sql
-    assert len(arrow) > 0
+    got = spark_rows(
+        knn_label_agreement_lsh(df, "embedding", "vec_id", "label", **kw)
+    )
+    want = duckref.knn_lsh(
+        duckref.with_bucket(df, 4, 3, 11), "embedding", "vec_id", "label", "bucket", 5
+    )
+    assert got == want
+    assert len(got[1]) > 0
+
+
+def test_knn_lsh_drops_null_and_zero_norm_vectors(spark):
+    """A NULL or zero-norm vector has no cosine: the row is dropped
+    before scoring, so it gets no verdict and is nobody's neighbor (a
+    NULL vector used to fail the kernel; a zero-norm one got a verdict
+    and was counted as a neighbor)."""
+    from bytewax_spark.functions.similarity import knn_label_agreement_lsh
+
+    rows = [
+        (1, [1.0, 0.0, 0.0], 0),
+        (2, [0.9, 0.1, 0.0], 0),
+        (3, None, 1),
+        (4, [0.0, 0.0, 0.0], 1),
+        (5, [0.8, 0.2, 0.1], 1),
+    ]
+    df = spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>, label int"
+    )
+    # one plane: every nonzero vector here lies on the same side, so
+    # NULL, zero and real vectors would all share bucket 0
+    kw = dict(k=2, n_planes=1, dims=3, seed=11)
+    out = knn_label_agreement_lsh(df, "embedding", "vec_id", "label", **kw)
+    want = duckref.knn_lsh(
+        duckref.with_bucket(df, 3, 1, 11), "embedding", "vec_id", "label", "bucket", 2
+    )
+    assert spark_rows(out) == want
+    assert {r["vec_id"] for r in out.collect()} <= {1, 2, 5}
 
 
 def test_knn_lsh_small_bucket_emits_partial_neighborhood(spark):
@@ -333,9 +356,9 @@ def test_knn_lsh_small_bucket_emits_partial_neighborhood(spark):
 
 
 def test_cosine_topk_batch_arrow_sql_parity(spark):
-    """The Arrow scatter kernel and the JVM broadcast-NL plan must
-    produce identical (probe_id, id, cosine) rows — including the
-    pre-cut self-exclusion and duplicate-vector ties broken by id."""
+    """The scatter kernel must return DuckDB SQL's (probe_id, id,
+    cosine) rows — including the pre-cut self-exclusion and
+    duplicate-vector ties broken by id."""
     import random
 
     from bytewax_spark.functions.similarity import cosine_topk_batch
@@ -353,30 +376,54 @@ def test_cosine_topk_batch_arrow_sql_parity(spark):
         F.col("vec_id").alias("pid"), F.col("embedding").alias("pvec")
     )
     for excl in (False, True):
-        a = {
-            tuple(r)
-            for r in cosine_topk_batch(
+        got = spark_rows(
+            cosine_topk_batch(
                 df, "embedding", "vec_id", probes, "pid", "pvec",
-                k=4, exclude_same_id=excl, impl="arrow",
-            ).collect()
-        }
-        b = {
-            tuple(r)
-            for r in cosine_topk_batch(
-                df, "embedding", "vec_id", probes, "pid", "pvec",
-                k=4, exclude_same_id=excl, impl="sql",
-            ).collect()
-        }
-        assert a == b, f"exclude_same_id={excl}"
-        assert len(a) == 9 * 4
+                k=4, exclude_same_id=excl,
+            )
+        )
+        want = duckref.topk_batch(
+            df, "embedding", "vec_id", probes, "pid", "pvec", 4, excl
+        )
+        assert got == want, f"exclude_same_id={excl}"
+        assert len(got[1]) == 9 * 4
+
+
+def test_cosine_topk_batch_drops_null_and_zero_norm_vectors(spark):
+    """A NULL or zero-norm vector, on either side, has no cosine: the
+    probe or corpus row is dropped before scoring (a NULL probe used to
+    fail on the driver, a NULL corpus vector in the kernel)."""
+    from bytewax_spark.functions.similarity import cosine_topk_batch
+
+    rows = [
+        (1, [1.0, 0.0, 0.0]),
+        (2, [0.9, 0.1, 0.0]),
+        (3, None),
+        (4, [0.0, 0.0, 0.0]),
+        (5, [0.8, 0.2, 0.1]),
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    probes = df.select(
+        F.col("vec_id").alias("pid"), F.col("embedding").alias("pvec")
+    )
+    for excl in (False, True):
+        out = cosine_topk_batch(
+            df, "embedding", "vec_id", probes, "pid", "pvec",
+            k=2, exclude_same_id=excl,
+        )
+        want = duckref.topk_batch(
+            df, "embedding", "vec_id", probes, "pid", "pvec", 2, excl
+        )
+        assert spark_rows(out) == want, f"exclude_same_id={excl}"
+        assert {r["probe_id"] for r in out.collect()} == {1, 2, 5}
 
 
 def test_knn_lsh_arrow_block_chunked_degenerate_bucket(spark, monkeypatch):
-    """Skew guard (round-7): a mass-duplicate corpus — every vector
-    identical, so ALL rows hash into one LSH bucket — must not require
-    one O(n^2) dense matrix in a single task. With the kernel's block
-    budget shrunk to a few rows, the chunked kernel must still produce
-    exactly the SQL plan's verdict rows."""
+    """Skew guard: a mass-duplicate corpus — every vector identical, so
+    ALL rows hash into one LSH bucket — must not require one O(n^2)
+    dense matrix in a single task. With the kernel's block budget
+    shrunk to a few rows, the chunked kernel must still produce
+    exactly DuckDB SQL's verdict rows."""
     from bytewax_spark.functions import similarity as sim
 
     monkeypatch.setattr(sim, "_KERNEL_BLOCK_BYTES", 256)
@@ -386,26 +433,20 @@ def test_knn_lsh_arrow_block_chunked_degenerate_bucket(spark, monkeypatch):
         rows, "vec_id long, embedding array<float>, label int"
     )
     kw = dict(k=5, n_planes=2, dims=4, seed=11)
-    arrow = {
-        tuple(r)
-        for r in sim.knn_label_agreement_lsh(
-            df, "embedding", "vec_id", "label", impl="arrow", **kw
-        ).collect()
-    }
-    sql = {
-        tuple(r)
-        for r in sim.knn_label_agreement_lsh(
-            df, "embedding", "vec_id", "label", impl="sql", **kw
-        ).collect()
-    }
-    assert arrow == sql
-    assert len(arrow) == n  # every row audited despite the degenerate bucket
+    got = spark_rows(
+        sim.knn_label_agreement_lsh(df, "embedding", "vec_id", "label", **kw)
+    )
+    want = duckref.knn_lsh(
+        duckref.with_bucket(df, 4, 2, 11), "embedding", "vec_id", "label", "bucket", 5
+    )
+    assert got == want
+    assert len(got[1]) == n  # every row audited despite the degenerate bucket
 
 
 def test_arrow_kernels_preserve_string_ids(spark):
     """The kernels' output schemas derive from the INPUT id types —
-    a hardcoded `long` silently turned string-id callers into runtime
-    task failures once arrow became the default path."""
+    a hardcoded `long` turned string-id callers into runtime task
+    failures. Rows match DuckDB SQL on string ids."""
     import random
 
     from bytewax_spark.functions.similarity import (
@@ -425,37 +466,25 @@ def test_arrow_kernels_preserve_string_ids(spark):
         F.col("vec_id").alias("pid"), F.col("embedding").alias("pvec")
     )
     for excl in (False, True):
-        a = {
-            tuple(r)
-            for r in cosine_topk_batch(
-                df, "embedding", "vec_id", probes, "pid", "pvec",
-                k=3, exclude_same_id=excl, impl="arrow",
-            ).collect()
-        }
-        b = {
-            tuple(r)
-            for r in cosine_topk_batch(
-                df, "embedding", "vec_id", probes, "pid", "pvec",
-                k=3, exclude_same_id=excl, impl="sql",
-            ).collect()
-        }
-        assert a == b, f"exclude_same_id={excl}"
-        assert all(isinstance(t[0], str) and isinstance(t[1], str) for t in a)
+        out = cosine_topk_batch(
+            df, "embedding", "vec_id", probes, "pid", "pvec",
+            k=3, exclude_same_id=excl,
+        )
+        want = duckref.topk_batch(
+            df, "embedding", "vec_id", probes, "pid", "pvec", 3, excl
+        )
+        assert spark_rows(out) == want, f"exclude_same_id={excl}"
+        assert all(
+            isinstance(r["probe_id"], str) and isinstance(r["vec_id"], str)
+            for r in out.collect()
+        )
     kw = dict(k=3, n_planes=2, dims=4, seed=5)
-    ka = {
-        tuple(r)
-        for r in knn_label_agreement_lsh(
-            df, "embedding", "vec_id", "label", impl="arrow", **kw
-        ).collect()
-    }
-    ks = {
-        tuple(r)
-        for r in knn_label_agreement_lsh(
-            df, "embedding", "vec_id", "label", impl="sql", **kw
-        ).collect()
-    }
-    assert ka == ks
-    assert all(isinstance(t[0], str) for t in ka)
+    out = knn_label_agreement_lsh(df, "embedding", "vec_id", "label", **kw)
+    want = duckref.knn_lsh(
+        duckref.with_bucket(df, 4, 2, 5), "embedding", "vec_id", "label", "bucket", 3
+    )
+    assert spark_rows(out) == want
+    assert all(isinstance(r["vec_id"], str) for r in out.collect())
 
 
 def test_round6_half_up_is_half_away_from_zero_not_bankers():

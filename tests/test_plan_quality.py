@@ -166,13 +166,13 @@ def test_domain_mixture_count_bounded_to_listed_domains(spark, sf_dir):
 
 
 def test_lsh_multiprobe_one_pinned_bucket_exchange(spark, sf_dir):
-    """The hamming-1 multiprobe (impl='arrow' default since r7) is ONE
-    exchange on the probe bucket key feeding grouped Arrow kernels —
-    never a nested-loop over pairs, never a per-row Python UDF, and
-    the kernel stage keeps the pinned shuffle-partition fan-out (AQE
-    would coalesce the byte-small bucket shuffle and serialize the
-    quadratic per-bucket work). The SQL join shape stays gated by the
-    parity test (tests/test_functions.py)."""
+    """The hamming-1 multiprobe is ONE exchange on the probe bucket
+    key feeding grouped Arrow kernels — never a nested-loop over
+    pairs, never a per-row Python UDF, and the kernel stage keeps the
+    pinned shuffle-partition fan-out (AQE would coalesce the
+    byte-small bucket shuffle and serialize the quadratic per-bucket
+    work). Its rows are checked against DuckDB SQL in
+    tests/test_functions.py."""
     plan = _plan(spark, "lsh_cosine_multiprobe_pairs", sf_dir)
     assert "NestedLoop" not in plan
     assert "FlatMapGroupsInPandas" in plan  # grouped kernel, not a join
@@ -244,11 +244,9 @@ def test_dsir_weight_table_broadcasts(spark, sf_dir):
 
 
 def test_winnow_single_hash_transform_in_plan(spark, sf_dir):
-    # r7: the default is the shuffle-free mapInArrow kernel — the
-    # whole winnow is per-document, so the plan must be scan → kernel
-    # with NO Exchange (the old SQL shape paid a full gram-row
-    # exchange + sort for the window; it survives behind impl="sql",
-    # gated below)
+    # the winnow is per-document, so the plan must be scan → the
+    # mapInArrow kernel with NO keyed Exchange (a row-based plan pays
+    # a full gram-row exchange + sort for the window)
     plan = _plan(spark, "winnow_fingerprints_docs", sf_dir)
     assert "MapInArrow" in plan
     # no keyed shuffle and no window machinery remain; the only
@@ -257,23 +255,6 @@ def test_winnow_single_hash_transform_in_plan(spark, sf_dir):
     assert "hashpartitioning" not in plan
     assert "Window" not in plan
     assert plan.count("Exchange") <= 1
-
-
-def test_winnow_sql_impl_single_hash_transform_in_plan(spark, sf_dir):
-    # regression gate for the Generate-inlining pathology in the SQL
-    # path: the gram md5 must appear ONCE (codegen projection after
-    # the explode), never replicated per window branch or per output
-    # row
-    from bytewax_spark.functions import text as tx
-    from bytewax_spark.io import read_parquet
-
-    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
-    df = tx.winnow_fingerprints(docs, "text", "doc_id", k=5, window=4, impl="sql")
-    plan = df._jdf.queryExecution().executedPlan().toString().split(
-        "== Initial Plan =="
-    )[0]
-    assert plan.count("md5") == 1
-    assert "EvalPython" not in plan
 
 
 def test_span_dedup_shuffles_hashes_not_text(spark, sf_dir):

@@ -325,11 +325,12 @@ def test_winnow_shared_substring_collides(spark):
 
 
 def test_winnow_arrow_sql_parity(spark):
-    # the r7 mapInArrow kernel must reproduce the SQL plan's rows
-    # bit-for-bit, across the edge shapes: empty text, text shorter
+    # the mapInArrow kernel must reproduce the registry's DuckDB oracle
+    # SQL row for row, across the edge shapes: empty text, text shorter
     # than k, gram count below the window width, ties, and non-ascii
     # (code-point slicing vs utf-8 byte slicing)
     from bytewax_spark.functions import text as tx
+    from tests import duckref
 
     rows = [
         (0, "the quick brown fox jumps over the lazy dog"),
@@ -344,11 +345,8 @@ def test_winnow_arrow_sql_parity(spark):
         (9, "the quick brown fox jumps over the lazy dog"),  # dup text
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    arrow = tx.winnow_fingerprints(df, "text", "doc_id", k=5, window=4)
-    sql = tx.winnow_fingerprints(df, "text", "doc_id", k=5, window=4, impl="sql")
-    assert sorted(map(tuple, arrow.collect())) == sorted(map(tuple, sql.collect()))
-    with pytest.raises(ValueError):
-        tx.winnow_fingerprints(df, "text", "doc_id", impl="nope")
+    got = tx.winnow_fingerprints(df, "text", "doc_id", k=5, window=4)
+    assert duckref.spark_rows(got) == duckref.winnow(df)
 
 
 # ---------------------------------------------------------------------------
