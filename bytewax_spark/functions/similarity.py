@@ -24,6 +24,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..io import read_parquet
+
 __all__ = [
     "adaptive_n_planes",
     "centroid_outliers",
@@ -184,15 +186,41 @@ def cosine_topk_batch(
     cut is ``topk.top_k_per_group`` — the two-phase skew-proof rank,
     so even with one probe no single task sorts every candidate.
     Result is EXACTLY per-probe top-k under (cosine desc, id asc)."""
+    return _scatter_topk(
+        df, vec_col, id_col, probes, probe_id_col, probe_vec_col, k, fanout,
+        exclude_same_id,
+    )
+
+
+def _scatter_topk(
+    df: DataFrame,
+    vec_col: str,
+    id_col: str,
+    probes: DataFrame,
+    probe_id_col: str,
+    probe_vec_col: str,
+    k: int,
+    fanout: int,
+    exclude_same_id: bool,
+    carry: tuple[str, str] | None = None,
+) -> DataFrame:
+    """The kernel of :func:`cosine_topk_batch`: per-probe top-k rows
+    ``(probe_id, id, cosine)``. ``carry=(probe_col, corpus_col)`` adds
+    a probe-side column, pulled with the probe vectors, after
+    ``probe_id`` and a corpus-side column after ``id``, so a caller
+    needs no join to bring them back."""
     import numpy as np
     import pandas as pd
+    from pyspark.sql.types import DoubleType, StructField, StructType
 
     from .topk import top_k_per_group
 
+    p_extra, c_extra = ([carry[0]], [carry[1]]) if carry else ([], [])
     pr, pmat, pnorm = _scorable_rows(
         probes.select(
             F.col(probe_id_col).alias("probe_id"),
             as_double(probe_vec_col).alias("_v"),
+            *p_extra,
         ).toPandas()
     )
     if pmat.size * 8 > _PROBE_PULL_CAP_BYTES:
@@ -202,41 +230,49 @@ def cosine_topk_batch(
             "with knn_label_agreement_lsh at corpus scale"
         )
     pids = pr["probe_id"].to_numpy()
-    bc = df.sparkSession.sparkContext.broadcast((pids, pmat, pnorm))
-    # output id types DERIVE from the input schemas (a hardcoded
-    # `long` here silently broke every caller with string ids)
-    pid_dt = probes.schema[probe_id_col].dataType.simpleString()
-    id_dt = df.schema[id_col].dataType.simpleString()
-    schema = f"probe_id {pid_dt}, {id_col} {id_dt}, cosine double"
+    pvals = [pr[c].to_numpy() for c in p_extra]
+    bc = df.sparkSession.sparkContext.broadcast((pids, pvals, pmat, pnorm))
+    # output types DERIVE from the input schemas (a hardcoded `long`
+    # here silently broke every caller with string ids)
+    fields = [
+        StructField("probe_id", probes.schema[probe_id_col].dataType),
+        *[StructField(c, probes.schema[c].dataType) for c in p_extra],
+        StructField(id_col, df.schema[id_col].dataType),
+        *[StructField(c, df.schema[c].dataType) for c in c_extra],
+        StructField("cosine", DoubleType()),
+    ]
 
     def gen(batches):
-        b_pids, b_pmat, b_pnorm = bc.value
+        b_pids, b_pvals, b_pmat, b_pnorm = bc.value
         for pdf in batches:
             pdf, v, vnorm = _scorable_rows(pdf)
             n = len(pdf)
             if n == 0 or len(b_pids) == 0:
                 continue
             ids = pdf[id_col].to_numpy()
+            cvals = [pdf[c].to_numpy() for c in c_extra]
             cmat = round6_half_up(
                 (b_pmat @ v.T) / np.outer(b_pnorm, vnorm)
             )
             if exclude_same_id:
                 cmat[b_pids[:, None] == ids[None, :]] = -np.inf
             kk = min(k, n)
-            out_p, out_i, out_c = [], [], []
+            out = {f.name: [] for f in fields}
             for qi in range(len(b_pids)):
                 row = cmat[qi]
                 sel = np.lexsort((ids, -row))[:kk]
                 sel = sel[row[sel] > -np.inf]
-                out_p.extend([b_pids[qi]] * len(sel))
-                out_i.extend(ids[sel].tolist())
-                out_c.extend(row[sel].tolist())
-            yield pd.DataFrame(
-                {"probe_id": out_p, id_col: out_i, "cosine": out_c}
-            )
+                out["probe_id"].extend([b_pids[qi]] * len(sel))
+                out[id_col].extend(ids[sel].tolist())
+                out["cosine"].extend(row[sel].tolist())
+                for c, vals in zip(p_extra, b_pvals):
+                    out[c].extend([vals[qi]] * len(sel))
+                for c, vals in zip(c_extra, cvals):
+                    out[c].extend(vals[sel].tolist())
+            yield pd.DataFrame(out)
 
-    src = df.select(F.col(id_col), as_double(vec_col).alias("_v"))
-    scored = src.mapInPandas(gen, schema)
+    src = df.select(F.col(id_col), as_double(vec_col).alias("_v"), *c_extra)
+    scored = src.mapInPandas(gen, StructType(fields))
     return top_k_per_group(
         scored, "probe_id", [F.col("cosine").desc()], id_col, k, fanout
     )
@@ -554,7 +590,7 @@ def ivf_search_index(
     if nprobe < 1:
         raise ValueError(f"nprobe must be >= 1, got {nprobe}")
     q = _qvec(query_vec)
-    cdf = spark.read.parquet(f"{index_dir}/centroids")
+    cdf = read_parquet(spark, f"{index_dir}/centroids")
     best = (
         cdf.select("_cell", F.round(cosine(F.col("_centroid"), q), 6).alias("_c"))
         .orderBy(F.col("_c").desc(), F.col("_cell"))
@@ -562,7 +598,7 @@ def ivf_search_index(
         .collect()
     )
     probe_cells = [r["_cell"] for r in best]
-    scan = spark.read.parquet(f"{index_dir}/assignments").filter(
+    scan = read_parquet(spark, f"{index_dir}/assignments").filter(
         F.col("_cell").isin(probe_cells)
     )
     v = as_double(vec_col)
@@ -752,42 +788,46 @@ def knn_label_agreement(
     (cosine, self excluded) that carry the SAME label — rows with low
     agreement are the mislabeled-sample candidates. Returns
     ``(id, label, n_nbrs, n_same, agree_ppm)`` with ``agree_ppm`` an
-    exact integer.
+    exact integer. A NULL label agrees with no label, NULL included:
+    a probe whose label is NULL has ``n_same = 0``.
 
-    Built on ``cosine_topk_batch`` (corpus scanned once, probes
-    broadcast, two-phase per-probe top-k): exact brute force — right
-    for query batches and QA samples; at corpus scale bucket with
-    ``lsh_buckets``/``ivf_topk`` first and run the agreement join
-    inside cells. The label join back is id-keyed and
-    broadcast-friendly. ``probes`` restricts the audit to a subset
-    (same schema as ``df``) — the usual QA shape, since brute force is
-    inherently probes × corpus; default audits every row."""
+    Built on ``cosine_topk_batch``'s kernel (corpus scanned once,
+    probes broadcast, two-phase per-probe top-k): exact brute force —
+    right for query batches and QA samples; at corpus scale bucket with
+    ``lsh_buckets``/``ivf_topk`` first and run the agreement inside
+    cells. The labels ride the kernel: the probe labels are pulled with
+    the probe vectors, each neighbour's label leaves its scan batch with
+    its partial top-k row, and one ``groupBy`` over the cut rows counts
+    the agreements — no join brings a label back. Pulling the probes is
+    the one Spark job that runs while the flow is built, and it stays:
+    the broadcast probe matrix is the algorithm. ``probes`` restricts
+    the audit to a subset (same schema as ``df``) — the usual QA shape,
+    since brute force is inherently probes × corpus; default audits
+    every row."""
     if probes is None:
         probes = df
-    labels = df.select(
-        F.col(id_col).alias("_nid"), F.col(label_col).alias("_nlab")
-    )
-    probes = probes.select(
-        F.col(id_col).alias("_pid"),
-        F.col(vec_col).alias("_pv"),
-        F.col(label_col).alias("_plab"),
-    )
-    nn = cosine_topk_batch(
-        df, vec_col, id_col, probes, "_pid", "_pv", k=k,
+    nn = _scatter_topk(
+        df.select(id_col, vec_col, F.col(label_col).alias("_nlab")),
+        vec_col,
+        id_col,
+        probes.select(
+            F.col(id_col).alias("_pid"),
+            F.col(vec_col).alias("_pv"),
+            F.col(label_col).alias("_plab"),
+        ),
+        "_pid",
+        "_pv",
+        k,
+        fanout=16,
         exclude_same_id=True,
+        carry=("_plab", "_nlab"),
     )
+    same = F.when(F.col("_nlab") == F.col("_plab"), 1).otherwise(0)
     return (
-        nn.join(labels, nn[id_col] == labels["_nid"])
-        .join(
-            probes.select("_pid", "_plab"),
-            nn["probe_id"] == F.col("_pid"),
-        )
-        .groupBy(F.col("probe_id").alias(id_col), F.col("_plab").alias(label_col))
+        nn.groupBy(F.col("probe_id").alias(id_col), F.col("_plab").alias(label_col))
         .agg(
             F.count(F.lit(1)).alias("n_nbrs"),
-            F.sum((F.col("_nlab") == F.col("_plab")).cast("long")).alias(
-                "n_same"
-            ),
+            F.sum(same).cast("long").alias("n_same"),
         )
         .withColumn(
             "agree_ppm", F.expr("(n_same * 1000000L) div n_nbrs")

@@ -1,19 +1,30 @@
 """Table loading helpers.
 
-``read_parquet`` handles parquet TIMESTAMP(NANOS) columns, which Spark
-(4.x) cannot scan natively: it inspects the footer schema driver-side
-(pyarrow — cheap, metadata only), enables
-``spark.sql.legacy.parquet.nanosAsLong`` for the scan, and rewrites
-each nano column to ``TIMESTAMP_NTZ`` via integer microsecond math
-(``ts div 1000`` — long division, no double precision loss at 1e18
-nanos). Pure column expressions: stays in codegen, pushdown on other
-columns is unaffected.
+``read_parquet`` builds a read that runs no Spark job until its action.
+Spark's own ``spark.read.parquet`` infers the schema with a one-task job
+that reads a footer, one job per table a flow reads, all before the flow
+runs. Here the footers are read driver-side with pyarrow (metadata
+only) and the schema is handed to ``spark.read.schema``: the Spark
+schema stored in the footer when there is one, else the Arrow schema
+mapped as Spark's inference maps the parquet types. Inputs where the two could differ — partitioned or mixed
+directories, unusual column types, non-default inference settings — are
+left to Spark's inference.
+
+Parquet TIMESTAMP(NANOS) columns, which Spark (4.x) cannot read as
+timestamps, are read as their ``long`` nanoseconds and rewritten to
+``TIMESTAMP_NTZ`` via integer microsecond math (``ts div 1000`` — long
+division, no double precision loss at 1e18 nanos). Pure column
+expressions: stays in codegen, pushdown on other columns is unaffected.
 """
 
 from __future__ import annotations
 
+import json
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 __all__ = [
     "read_parquet",
@@ -82,40 +93,164 @@ def bucketed_table(spark: SparkSession, table: str) -> DataFrame:
     return spark.table(table)
 
 
-def _nano_cols(path: str) -> list[str]:
-    try:
-        import pyarrow.dataset as ds
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+# the settings under which Spark's parquet schema inference reads a
+# footer the way the mapping below does
+_INFER_DEFAULTS = {
+    "spark.sql.parquet.binaryAsString": "false",
+    "spark.sql.parquet.int96AsTimestamp": "true",
+}
+# parquet leaf annotations whose Spark type ``from_arrow_type`` gives
+# (ENUM, JSON, UUID, TIME, FLOAT16, ... are left to Spark)
+_PLAIN_LEAVES = {"NONE", "STRING", "INT", "DECIMAL", "DATE", "TIMESTAMP"}
 
-        schema = ds.dataset(path, format="parquet").schema
-    except Exception:
-        return []
-    out = []
-    for field in schema:
-        t = field.type
-        if str(t).startswith("timestamp[ns"):
-            out.append(field.name)
-    return out
+
+def _data_files(path: str) -> tuple[list[str], bool]:
+    """``(files, flat)``: the files Spark scans under ``path`` and
+    whether they all sit directly in it. Under subdirectories only the
+    first file is returned."""
+
+    def listed(name: str) -> bool:
+        # Spark's listing skips hidden and `_` names, but not `k=v` directories
+        return not (
+            name.startswith(".")
+            or (name.startswith("_") and "=" not in name)
+            or name.endswith("._COPYING_")
+        )
+
+    if os.path.isfile(path):
+        return [path], True
+    for root, dirs, names in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if listed(d))
+        files = [os.path.join(root, n) for n in sorted(names) if listed(n)]
+        if root == path and not dirs:
+            return files, True
+        if files:
+            return files[:1], False
+    return [], False
+
+
+def _plain(t) -> bool:
+    """Arrow types whose parquet encoding Spark infers as
+    ``from_arrow_type`` maps them. The footer's stored Arrow schema can
+    name types the parquet file does not have (a duration is an
+    ``int64``, a dictionary a ``string``): those are left to Spark."""
+    import pyarrow.types as pt
+
+    if pt.is_list(t) or pt.is_large_list(t):
+        return _plain(t.value_type)
+    if pt.is_map(t):
+        return _plain(t.key_type) and _plain(t.item_type)
+    if pt.is_struct(t):
+        return all(_plain(f.type) for f in t)
+    return (pt.is_timestamp(t) and t.unit != "ns") or any(
+        test(t)
+        for test in (
+            pt.is_boolean, pt.is_signed_integer, pt.is_float32, pt.is_float64,
+            pt.is_decimal128, pt.is_string, pt.is_large_string, pt.is_binary,
+            pt.is_large_binary, pt.is_date32,
+        )
+    )
+
+
+def _file_schema(meta, prefer_ntz: bool) -> tuple[StructType | None, list[str]]:
+    """``(schema, nanos)`` for one parquet footer: the schema Spark
+    infers from it, nanosecond timestamps as ``long`` (None where the
+    mapping is not sure to agree with Spark's), and its top-level
+    TIMESTAMP(NANOS) columns."""
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    leaves = [meta.schema.column(i) for i in range(meta.num_columns)]
+    nanos = [
+        c.name
+        for c in leaves
+        if c.path == c.name
+        and json.loads(c.logical_type.to_json()).get("timeUnit") == "nanoseconds"
+    ]
+    stored = (meta.metadata or {}).get(_SPARK_ROW_METADATA)
+    if stored is not None:
+        try:
+            return StructType.fromJson(json.loads(stored)), nanos
+        except (ValueError, KeyError, TypeError):
+            return None, nanos
+    if any(c.logical_type.type not in _PLAIN_LEAVES for c in leaves):
+        return None, nanos
+    fields = []
+    for f in meta.schema.to_arrow_schema():
+        if f.name in nanos:
+            dt = LongType()
+        elif _plain(f.type):
+            dt = from_arrow_type(f.type, prefer_ntz)
+        else:
+            return None, nanos
+        fields.append(StructField(f.name, dt, f.nullable))
+    return StructType(fields), nanos
+
+
+def _footer_schema(spark: SparkSession, path: str) -> tuple[StructType | None, list[str]]:
+    """``(schema, nanos)`` for a parquet file or a flat directory of
+    them, from their footers alone: the schema Spark would infer (None
+    where it must infer it itself) and the nanosecond timestamp
+    columns, which that schema reads as ``long``."""
+    import pyarrow.parquet as pq
+
+    files, flat = _data_files(path)
+    try:
+        metas = [pq.read_metadata(f) for f in files]
+    except (OSError, ValueError):
+        return None, []
+    if not metas:
+        return None, []
+    ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled", "true").lower() == "true"
+    found = [_file_schema(m, ntz) for m in metas]
+    defaults = all(spark.conf.get(k, v).lower() == v for k, v in _INFER_DEFAULTS.items())
+    if flat and defaults and all(f == found[0] for f in found):
+        return found[0]
+    return None, found[0][1]
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet`` that tolerates nanosecond timestamps."""
-    nanos = _nano_cols(path)
-    if not nanos:
-        return spark.read.parquet(path)
-    key = "spark.sql.legacy.parquet.nanosAsLong"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "true")
-    try:
-        # Schema resolution happens here; the flag is only needed while
-        # the relation is analyzed, so restore it before returning.
+    """``spark.read.parquet`` that runs no Spark job and tolerates
+    nanosecond timestamps.
+
+    The schema comes from the parquet footers, read driver-side with
+    pyarrow: a single file, or a directory of files with no
+    subdirectories whose footers all agree, is read with
+    ``spark.read.schema(<footer schema>)``. That schema is the one
+    Spark's inference gives: the Spark schema stored in the footer when
+    the file has one (Spark writes it), else the footer's Arrow schema
+    through ``from_arrow_type``, tz-naive timestamps as
+    ``TIMESTAMP_NTZ`` under ``spark.sql.parquet.inferTimestampNTZ.enabled``.
+
+    Any other input is left to Spark's inference, which runs a job to
+    read a footer: a partitioned directory (its partition columns come
+    from the paths), footers that disagree or that pyarrow cannot read,
+    a column whose parquet type Spark maps in its own way (unsigned,
+    INT96, ENUM, TIME, ...), or a non-default
+    ``spark.sql.parquet.binaryAsString`` / ``int96AsTimestamp``.
+
+    A TIMESTAMP(NANOS) column, which Spark cannot read as a timestamp,
+    is read as its ``long`` nanoseconds and returned as
+    ``TIMESTAMP_NTZ``."""
+    schema, nanos = _footer_schema(spark, path)
+    if schema is not None:
+        df = spark.read.schema(schema).parquet(path)
+    elif nanos:
+        key = "spark.sql.legacy.parquet.nanosAsLong"
+        prev = spark.conf.get(key, None)
+        spark.conf.set(key, "true")
+        try:
+            # the flag is only read while the schema is inferred
+            df = spark.read.parquet(path)
+        finally:
+            if prev is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, prev)
+    else:
         df = spark.read.parquet(path)
-        for c in nanos:
-            df = df.withColumn(
-                c, F.expr(f"CAST(timestamp_micros(`{c}` div 1000) AS TIMESTAMP_NTZ)")
-            )
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+    for c in nanos:
+        df = df.withColumn(
+            c, F.expr(f"CAST(timestamp_micros(`{c}` div 1000) AS TIMESTAMP_NTZ)")
+        )
     return df

@@ -127,9 +127,10 @@ def input(step_id: str, flow: Dataflow, source: Any) -> Stream:  # noqa: A001
     elif isinstance(source, DataFrame):
         df = source
     elif isinstance(source, str):
+        from bytewax_spark.io import read_parquet
         from bytewax_spark.session import get_spark
 
-        df = get_spark().read.parquet(source)
+        df = read_parquet(get_spark(), source)
     else:
         raise TypeError(f"unsupported source type {type(source).__name__}")
     fq = flow.register(step_id, "input", ())

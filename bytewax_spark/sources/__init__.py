@@ -55,17 +55,17 @@ class ParquetSource(Source):
         self.path, self.streaming, self.schema = path, streaming, schema
 
     def to_df(self) -> DataFrame:
+        from bytewax_spark.io import read_parquet
+
         spark = self._spark()
         if self.streaming:
-            reader = spark.readStream
             if self.schema is None:
-                # streaming file sources require a schema; infer from a batch peek
-                self.schema = spark.read.parquet(self.path).schema
-            return reader.schema(self.schema).parquet(self.path)
-        reader = spark.read
-        if self.schema is not None:
-            reader = reader.schema(self.schema)
-        return reader.parquet(self.path)
+                # streaming file sources require a schema; take the batch one
+                self.schema = read_parquet(spark, self.path).schema
+            return spark.readStream.schema(self.schema).parquet(self.path)
+        if self.schema is None:
+            return read_parquet(spark, self.path)
+        return spark.read.schema(self.schema).parquet(self.path)
 
 
 class OrcSource(Source):

@@ -102,18 +102,12 @@ def topk_batch(df, vec_col, id_col, probes, probe_id_col, probe_vec_col, k,
     )
 
 
-def knn_lsh(df, vec_col, id_col, label_col, bucket_col, k):
-    """``similarity.knn_label_agreement_lsh``: each row's k nearest
-    other rows in its bucket (the shape of ``_knn_lsh_oracle``)."""
-    return _run(
-        f"""
-        WITH b AS ({_vectors(id_col, vec_col, f"{label_col} AS lab",
-                             f"{bucket_col} AS bucket")}),
-        cand AS (
-          SELECT p.id AS probe_id, p.lab AS plab, e.id AS nid, e.lab AS nlab,
-                 {_cos("e.v", "p.v")} AS cosine
-          FROM b p JOIN b e ON p.bucket = e.bucket AND p.id <> e.id
-        ),
+def _agreement(cand: str, id_col: str, label_col: str, k: int) -> str:
+    """The registry oracle's verdict over ``cand``'s
+    ``(probe_id, plab, nid, nlab, cosine)`` rows: a NULL label never
+    agrees (``CASE WHEN nlab = plab``)."""
+    return f"""
+        WITH cand AS ({cand}),
         top AS (
           SELECT *, ROW_NUMBER() OVER (PARTITION BY probe_id
                                        ORDER BY cosine DESC, nid) AS rk
@@ -126,7 +120,42 @@ def knn_lsh(df, vec_col, id_col, label_col, bucket_col, k):
                     // COUNT(*) AS BIGINT) AS agree_ppm
         FROM top WHERE rk <= {k}
         GROUP BY 1, 2
-        """,
+        """
+
+
+def knn_agreement(df, vec_col, id_col, label_col, probes, k):
+    """``similarity.knn_label_agreement``: each probe's k nearest
+    other rows of ``df`` (the shape of the registry oracle)."""
+    return _run(
+        _agreement(
+            f"""
+            WITH e AS ({_vectors(id_col, vec_col, f"{label_col} AS lab")}),
+            p AS ({_vectors(id_col, vec_col, f"{label_col} AS lab", table="probes")})
+            SELECT p.id AS probe_id, p.lab AS plab, e.id AS nid, e.lab AS nlab,
+                   {_cos("e.v", "p.v")} AS cosine
+            FROM e CROSS JOIN p WHERE p.id <> e.id
+            """,
+            id_col, label_col, k,
+        ),
+        src=df,
+        probes=probes,
+    )
+
+
+def knn_lsh(df, vec_col, id_col, label_col, bucket_col, k):
+    """``similarity.knn_label_agreement_lsh``: each row's k nearest
+    other rows in its bucket (the shape of ``_knn_lsh_oracle``)."""
+    return _run(
+        _agreement(
+            f"""
+            WITH b AS ({_vectors(id_col, vec_col, f"{label_col} AS lab",
+                                 f"{bucket_col} AS bucket")})
+            SELECT p.id AS probe_id, p.lab AS plab, e.id AS nid, e.lab AS nlab,
+                   {_cos("e.v", "p.v")} AS cosine
+            FROM b p JOIN b e ON p.bucket = e.bucket AND p.id <> e.id
+            """,
+            id_col, label_col, k,
+        ),
         src=df,
     )
 

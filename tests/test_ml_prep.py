@@ -269,6 +269,39 @@ def test_knn_agreement_duplicate_vectors_keep_exactly_k_neighbors(spark):
     assert r.n_nbrs == 2 and r.n_same == 2 and r.agree_ppm == 1_000_000
 
 
+@pytest.mark.parametrize("label_type", ["string", "int"])
+def test_knn_agreement_matches_duckdb_reference(spark, label_type):
+    """Verdict rows equal the registry oracle's SQL over a corpus with
+    NULL probe and neighbour labels, NULL and zero-norm vectors, and
+    duplicate vectors tied at cosine 1.0. A NULL label agrees with
+    nothing, so its probe gets n_same = 0, never NULL."""
+    from bytewax_spark.functions.similarity import knn_label_agreement
+
+    labels = ["a", "b", None] if label_type == "string" else [1, 2, None]
+    rows = [
+        (1, [1.0, 0.0, 0.0], labels[2]),  # NULL-label probe in a tied group
+        (2, [1.0, 0.0, 0.0], labels[0]),
+        (3, [1.0, 0.0, 0.0], labels[2]),
+        (4, [1.0, 0.0, 0.0], labels[0]),
+        (5, [0.9, 0.1, 0.0], labels[1]),
+        (6, [0.0, 1.0, 0.0], labels[1]),
+        (7, [0.1, 0.9, 0.0], labels[2]),
+        (8, None, labels[0]),  # no vector: neither audited nor a neighbour
+        (9, [0.0, 0.0, 0.0], labels[1]),  # zero norm: likewise
+        (10, [0.0, 0.5, 0.5], labels[0]),
+    ]
+    df = spark.createDataFrame(
+        rows, f"vec_id long, embedding array<double>, label {label_type}"
+    )
+    probes = df.filter("vec_id IN (1, 3, 4, 6, 7, 8, 9)")
+    got = spark_rows(
+        knn_label_agreement(df, "embedding", "vec_id", "label", k=3, probes=probes)
+    )
+    want = duckref.knn_agreement(df, "embedding", "vec_id", "label", probes, 3)
+    assert got == want
+    assert len(got[1]) == 5
+
+
 def test_knn_lsh_arrow_and_sql_impls_agree(spark):
     """The bucket kernel must return DuckDB SQL's verdict rows on a
     corpus with planted structure (clusters + a mislabeled point +
