@@ -31,6 +31,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from bytewax_spark.functions._materialize import materialize
+
 __all__ = [
     "cohort_retention",
     "event_ngrams",
@@ -361,8 +363,11 @@ def rfm_segments(
         "frequency",
         "monetary_micro",
     )
-    scored = _cache_scored_table(scored)
-    total = scored.count()  # 1 driver long; also warms the cache
+    scored = materialize(
+        scored,
+        "one row per user, counted here and read by the three tile passes",
+    )
+    total = scored.count()  # 1 driver long; also fills the checkpoint
     if total <= _CROSSED_BLOCK_WINDOW_MAX:
         # scale-adaptive: the ntile input is the PER-USER table, already
         # reduced by the aggregation above — when it fits the same
@@ -522,34 +527,6 @@ def _scalable_ntile(
         user_col, _ntile_of_rank(F.col("_k"), total, n).alias(out)
     )
     return easy.unionByName(hard)
-
-
-# persisted per-user RFM tables; same lifecycle as the MinHash
-# signature caches (dedup.py _cache_signature_table): at most one
-# cached, identical replays reuse it, new inputs evict first.
-_SCORED_CACHES: list[DataFrame] = []
-
-
-def release_rfm_caches() -> None:
-    """Unpersist any per-user table cached by :func:`rfm_segments`.
-    Safe at any time — an unpersisted table still being read simply
-    recomputes from lineage."""
-    while _SCORED_CACHES:
-        _SCORED_CACHES.pop().unpersist()
-
-
-def _cache_scored_table(scored: DataFrame) -> DataFrame:
-    prev = _SCORED_CACHES.pop() if _SCORED_CACHES else None
-    if prev is not None and prev._jdf.queryExecution().analyzed().sameResult(
-        scored._jdf.queryExecution().analyzed()
-    ):
-        scored = prev
-    else:
-        if prev is not None:
-            prev.unpersist()
-        scored = scored.persist()
-    _SCORED_CACHES.append(scored)
-    return scored
 
 
 def session_paths(

@@ -25,11 +25,10 @@ reproduces every signature bit-for-bit.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from bytewax_spark.functions._materialize import materialize
 from bytewax_spark.functions.text import hash64, tokenize, word_shingles
 
 __all__ = [
@@ -55,7 +54,6 @@ __all__ = [
     "minhash_lsh_recall",
     "minhash_lsh_verified_pairs",
     "minhash_lsh_pairs_incremental",
-    "release_signature_caches",
     "simhash",
     "embedding_cosine_pairs",
     "lsh_cosine_pairs",
@@ -328,6 +326,33 @@ def shingle_docs(df: DataFrame, text_col: str, id_col: str, n: int = 3) -> DataF
     )
 
 
+def _rarest_first(
+    df: DataFrame, text_col: str, id_col: str, n: int
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """``(sh, freq, docs)``: the ``(id, shingle)`` rows, each shingle's
+    document frequency ``_freq``, and per doc ``(_id, _toks, _size)``
+    with its shingles ordered rarest-first (a global (freq, shingle)
+    order makes prefixes consistent across docs). ``sh`` and ``docs``
+    are exploding slivers, recomputed per consumer (see
+    ``_materialize``)."""
+    sh = shingle_docs(df, text_col, id_col, n)
+    freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("_freq"))
+    docs = (
+        sh.join(freq, "shingle")
+        .groupBy(id_col)
+        .agg(
+            F.array_sort(F.collect_list(F.struct("_freq", "shingle"))).alias("_ord"),
+            F.count(F.lit(1)).alias("_size"),
+        )
+        .select(
+            F.col(id_col).alias("_id"),
+            F.transform("_ord", lambda s: s["shingle"]).alias("_toks"),
+            "_size",
+        )
+    )
+    return sh, freq, docs
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str,
@@ -350,27 +375,7 @@ def ngram_jaccard_pairs(
     verified with one ``array_intersect`` over the full sets — no
     quadratic key ever shuffles.
     """
-    # sh feeds the frequency agg AND the ordering join; docs feeds the
-    # prefix explode and both verify joins — cache each sliver once
-    # (signature-table lifecycle) instead of re-running the shingle
-    # explode + groupBy-collect pipeline per consumer subtree
-    sh = _cache_signature_table(shingle_docs(df, text_col, id_col, n))
-    freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("_freq"))
-    # per doc: shingle array ordered rarest-first (global (freq, shingle)
-    # order makes prefixes consistent across docs), plus set size
-    docs = _cache_signature_table(
-        sh.join(freq, "shingle")
-        .groupBy(id_col)
-        .agg(
-            F.array_sort(F.collect_list(F.struct("_freq", "shingle"))).alias("_ord"),
-            F.count(F.lit(1)).alias("_size"),
-        )
-        .select(
-            F.col(id_col).alias("_id"),
-            F.transform("_ord", lambda s: s["shingle"]).alias("_toks"),
-            "_size",
-        )
-    )
+    _, _, docs = _rarest_first(df, text_col, id_col, n)
     prefix_len = (F.col("_size") - F.ceil(F.lit(threshold) * F.col("_size")) + 1).cast("int")
     prefix = docs.select(
         "_id", "_size", F.explode(F.slice("_toks", F.lit(1), prefix_len)).alias("_tok")
@@ -459,122 +464,6 @@ def minhash_signatures(
     ).select(id_col, (F.col("_i0") + 1).alias("i"), "minhash")
 
 
-# persisted signature tables from minhash_lsh_pairs runs; see the
-# lifecycle comment inside minhash_lsh_pairs.
-_SIGNATURE_CACHES: list[DataFrame] = []
-
-
-def release_signature_caches() -> None:
-    """Unpersist any signature table cached by the MinHash pair
-    builders. Call after the pairs DataFrame has been fully
-    materialized (or at pipeline teardown). Safe at any time: an
-    unpersisted table that is still being read simply recomputes from
-    lineage."""
-    while _SIGNATURE_CACHES:
-        _SIGNATURE_CACHES.pop().unpersist()
-
-
-_SIGNATURE_CACHE_SLOTS = 3
-
-# Persist a sliver only when its SOURCE input is small enough that the
-# exploded table (shingles/bands blow up ~100-1000x over compressed
-# parquet) sits comfortably inside the storage pool. Above the cap the
-# sliver is left to recompute per consumer subtree: measured r7 on
-# containment_pairs at sf1 (5.8 MB input, 12 g heap), warm noop reps
-# are a stable 22-27 s WITHOUT the persist vs 35-172 s WITH it — a
-# resident multi-GB cache squeezes execution memory for every
-# downstream join and churns pages the whole rep (guide §5: caching is
-# only worth it when recomputing costs more than the memory pressure
-# the cache creates). At 100 TB an unconditional persist of a corpus
-# sliver is wrong for the same reason; the cap makes the policy
-# scale-adaptive rather than tuned to either test scale.
-_SLIVER_CACHE_DEFAULT_MAX = 3 << 20
-
-
-def _sliver_cache_max_bytes() -> int:
-    # read per call (it's called once per consumer build), so a
-    # runtime override in a long-lived session takes effect — the
-    # import-time read silently ignored late env changes
-    return int(
-        os.environ.get(
-            "BYTEWAX_SPARK_SLIVER_CACHE_MAX_INPUT", str(_SLIVER_CACHE_DEFAULT_MAX)
-        )
-    )
-
-
-def _input_bytes(df: DataFrame) -> int | None:
-    """Total on-disk bytes of the plan's file-source leaves; falls back
-    to Catalyst's optimized-plan size estimate when any leaf is not a
-    local file (hdfs://, s3://, …) so the size gate still works on
-    real clusters instead of silently never persisting there."""
-    try:
-        files = df.inputFiles()
-    except Exception:
-        files = None
-    if files:
-        total = 0
-        for f in files:
-            p = f[7:] if f.startswith("file://") else f
-            if not os.path.exists(p):
-                total = -1
-                break
-            total += os.path.getsize(p)
-        if total >= 0:
-            return total
-    try:
-        return int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
-        return None
-
-
-def _cache_signature_table(banded: DataFrame, force: bool = False) -> DataFrame:
-    """Lifecycle for persisted signature tables: at most
-    ``_SIGNATURE_CACHE_SLOTS`` stay cached (LRU by registration). A
-    repeated run over the same inputs produces a canonically-identical
-    plan — reuse the still-cached table (exactly what Spark's
-    CacheManager does for any identical cached plan; same staleness
-    semantics as ``df.cache()``). A different table beyond the slot
-    cap evicts the OLDEST entry BEFORE persisting: CacheManager keys
-    on canonicalized plans, so unpersisting an old handle after a new
-    persist of the same plan would tear down the shared entry and
-    leave its read diamond uncached.
-
-    Why more than one slot (r7): a composed query can hold several
-    hot diamonds at once — e.g. the LSH recall audit builds the
-    PPJoin doc-set table AND the banded signature table, and
-    verified-pairs caches the banded table plus the shingle-set
-    table. One slot made the second registration evict the first
-    mid-build; each cached sliver is a docs x (id, hash/array) table,
-    so the bounded handful is the same executor-memory posture the
-    single slot had."""
-    for i, prev in enumerate(_SIGNATURE_CACHES):
-        if prev._jdf.queryExecution().analyzed().sameResult(
-            banded._jdf.queryExecution().analyzed()
-        ):
-            # refresh LRU position
-            _SIGNATURE_CACHES.append(_SIGNATURE_CACHES.pop(i))
-            return prev
-    # ``force`` is for tables that COLLAPSE their input (e.g. the
-    # signature-class table: one row per distinct signature, O(docs)
-    # ids total) — the input-size gate below models EXPLODING slivers
-    # (shingles/bands, 100-1000x over input) and wrongly refuses
-    # these; recomputing them pays a full corpus scan per consumer.
-    if not force:
-        size = _input_bytes(banded)
-        if size is None or size > _sliver_cache_max_bytes():
-            # big (or unmeasurable) source: the exploded sliver would
-            # not sit comfortably in storage memory — recompute per
-            # consumer instead of thrashing the pool (policy note above)
-            return banded
-    while len(_SIGNATURE_CACHES) >= _SIGNATURE_CACHE_SLOTS:
-        _SIGNATURE_CACHES.pop(0).unpersist()
-    banded = banded.persist()
-    _SIGNATURE_CACHES.append(banded)
-    return banded
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str,
@@ -652,12 +541,11 @@ def minhash_lsh_pairs(
             F.size("_ids").alias("_m"),
         )
     )
-    # four consumers (within-pairs, both class-join sides, the
-    # expand-back table); forced persist — cls collapses the corpus to
-    # one row per distinct signature (O(docs) bytes total), so caching
-    # it is strictly cheaper than even one recompute of the full
-    # shingle+minhash pipeline (measured sf1: 31 s -> 12 s warm)
-    cls = _cache_signature_table(cls, force=True)
+    cls = materialize(
+        cls,
+        "one row per distinct signature, read by the within-class pairs, "
+        "both class-join sides and the expand-back table",
+    )
     # (a) within-class pairs: ids are sorted, so posexplode × slice
     # emits each unordered pair once. Stripes: index i goes to stripe
     # i % C, one row per (class, stripe) round-robined so a hot class
@@ -771,10 +659,6 @@ def minhash_lsh_verified_pairs(
             )
         ).alias("_toks"),
     )
-    # the set table feeds BOTH verify joins; uncached, each side would
-    # re-run the interpreted per-doc shingle+md5 transform over the
-    # whole corpus
-    sets = _cache_signature_table(sets)
     da = sets.select(F.col(id_col).alias("id_a"), F.col("_toks").alias("_ta"))
     db = sets.select(F.col(id_col).alias("id_b"), F.col("_toks").alias("_tb"))
     inter = F.size(F.array_intersect("_ta", "_tb"))
@@ -903,10 +787,10 @@ def minhash_lsh_pairs_incremental(
     Scale: both sides reduce to (id, band, bucket) rows before the
     equi-join — the seen corpus ships 16-byte buckets, never text —
     and the signatures for BOTH sides come from ONE union-tagged
-    pass (a side marker rides the aggregation), so the corpus scans
-    and shingle-explodes once, not once per side; the tagged table is
-    persisted (shared cache lifecycle) because both join sides filter
-    it. In production the seen side's signature table is a PERSISTED
+    pass (a side marker rides the aggregation), so every document is
+    scanned and shingle-exploded once: each join side's filter on the
+    marker prunes the pass to that side's rows. In production the seen
+    side's signature table is a PERSISTED
     artifact (write ``_banded``'s output once per ingest and append),
     so each daily batch costs one signature pass over the batch plus
     a bucket join, not a rescan of the corpus. No self-join:
@@ -917,7 +801,6 @@ def minhash_lsh_pairs_incremental(
     )
     both = tag(new_df, 0).unionByName(tag(seen_df, 1))
     banded = _banded(both, text_col, id_col, n, k, bands, extra_cols=("_side",))
-    banded = _cache_signature_table(banded)
     nb = banded.filter(F.col("_side") == 0).select(
         F.col(id_col).alias("new_id"), "band", "bucket"
     )
@@ -1350,29 +1233,23 @@ def dedup_spans_global(
     """
     out_col = out_col or text_col
     toks = tokenize(text_col)
-    # base feeds the span explode AND the final reassembly join; spans
-    # feeds the first-occurrence agg AND the covered join. Cache both
-    # slivers (signature-table lifecycle) so the tokenize and the
-    # per-span md5 pipeline each run once, spread off the scan first
-    # (single-row-group inputs would serialize them onto one core).
-    base = _cache_signature_table(
-        _spread(df.select(F.col(id_col), F.col(text_col))).select(
-            F.col(id_col), toks.alias("_toks")
-        )
+    # base and spans are token/span slivers, recomputed per consumer
+    # (see _materialize); spread off the scan first (single-row-group
+    # inputs would serialize the tokenize onto one core)
+    base = _spread(df.select(F.col(id_col), F.col(text_col))).select(
+        F.col(id_col), toks.alias("_toks")
     )
     npos = F.size("_toks") - F.lit(span_len - 1)
-    spans = _cache_signature_table(
-        base.filter(npos > 0).select(
-            id_col,
-            F.posexplode(
-                F.transform(
-                    F.sequence(F.lit(0), npos - 1),
-                    lambda p: hash64(
-                        F.array_join(F.slice("_toks", p + 1, span_len), " ")
-                    ),
-                )
-            ).alias("_pos", "_h"),
-        )
+    spans = base.filter(npos > 0).select(
+        id_col,
+        F.posexplode(
+            F.transform(
+                F.sequence(F.lit(0), npos - 1),
+                lambda p: hash64(
+                    F.array_join(F.slice("_toks", p + 1, span_len), " ")
+                ),
+            )
+        ).alias("_pos", "_h"),
     )
     first = spans.groupBy("_h").agg(
         F.min(F.struct(F.col(id_col).alias("i"), F.col("_pos").alias("p"))).alias(
@@ -1443,24 +1320,7 @@ def containment_pairs(
     candidate."""
     if not 0 < threshold <= 1:
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    # sh feeds the freq agg, the ordering join AND the full index;
-    # docs feeds the prefix explode, the size join and both verify
-    # joins — cache each sliver once (signature-table lifecycle)
-    sh = _cache_signature_table(shingle_docs(df, text_col, id_col, n))
-    freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("_freq"))
-    docs = _cache_signature_table(
-        sh.join(freq, "shingle")
-        .groupBy(id_col)
-        .agg(
-            F.array_sort(F.collect_list(F.struct("_freq", "shingle"))).alias("_ord"),
-            F.count(F.lit(1)).alias("_size"),
-        )
-        .select(
-            F.col(id_col).alias("_id"),
-            F.transform("_ord", lambda s: s["shingle"]).alias("_toks"),
-            "_size",
-        )
-    )
+    sh, freq, docs = _rarest_first(df, text_col, id_col, n)
     # rounded acceptance admits c >= |A|*(t - 5e-7); the prefix must
     # still hold a witness for those boundary pairs
     prefix_len = (
@@ -1573,15 +1433,11 @@ def hamming_neighbor_pairs(
     widths = [base + 1] * rem + [base] * (n_blocks - rem)
     offsets = [sum(widths[:i]) for i in range(n_blocks)]
     members = df.select(F.col(fp_col).alias("_fp"), F.col(id_col).alias("_id"))
-    # the membership table feeds FOUR subtrees below (distinct fps,
-    # both sides of the cross expansion, the hamming-0 cliques).
-    # Left as lineage each one re-executes the whole fingerprint
-    # pipeline (alias renames break exchange reuse) — for SimHash that
-    # was 4x re-tokenizing the corpus, for aHash 4x re-decoding every
-    # image. Persist the (fp, id) sliver once, same lifecycle as the
-    # MinHash signature tables (at most one cached; see
-    # _cache_signature_table / release_signature_caches).
-    members = _cache_signature_table(members)
+    members = materialize(
+        members,
+        "one (fp, id) row per doc, read by four subtrees; recomputing it "
+        "re-runs the fingerprint pipeline (tokenize, image decode) each time",
+    )
     fps = members.select("_fp").distinct()
     blocks = fps.select(
         "_fp",

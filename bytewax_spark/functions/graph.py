@@ -19,8 +19,9 @@ dense blobs of duplicates with tiny diameter (2-4 rounds in
 practice), so the round count stays flat as data grows — the 100 TB
 cost is per-round shuffle volume, which is |E| ids, not documents.
 The driver-side loop is inherent to iterative fixpoints (same as any
-Pregel superstep loop); each iteration localCheckpoints eagerly to
-truncate lineage so the plan doesn't grow with the round count.
+Pregel superstep loop); each iteration checkpoints eagerly
+(``_materialize.materialize``) to truncate lineage so the plan doesn't
+grow with the round count.
 """
 
 from __future__ import annotations
@@ -28,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegralType
+
+from bytewax_spark.functions._materialize import materialize
 
 __all__ = [
     "adamic_adar",
@@ -43,6 +46,20 @@ __all__ = [
     "pagerank",
     "triangle_counts",
 ]
+
+
+def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """``(u, v)`` with ``u < v`` per edge: direction ignored, self-loops
+    dropped, duplicates kept."""
+    return edges.select(
+        F.least(F.col(src), F.col(dst)).alias("u"),
+        F.greatest(F.col(src), F.col(dst)).alias("v"),
+    ).filter(F.col("u") != F.col("v"))
+
+
+def _endpoints(df: DataFrame, a: str, b: str, name: str = "node") -> DataFrame:
+    """Columns ``a`` and ``b`` of ``df`` stacked into one column ``name``."""
+    return df.select(F.col(a).alias(name)).union(df.select(F.col(b).alias(name)))
 
 
 def connected_components(
@@ -84,22 +101,23 @@ def connected_components(
         )
     else:
         labels = init_labels.select("node", "comp")
-    labels = labels.localCheckpoint(eager=True)
-    sym = sym.localCheckpoint(eager=True)
+    labels = materialize(labels, "round-0 labels of the fixpoint loop", eager=True)
+    sym = materialize(sym, "edge list read by every round", eager=True)
     for _ in range(max_iter):
         nbr_min = (
             sym.join(labels, sym["a"] == labels["node"])
             .groupBy(F.col("b").alias("node"))
             .agg(F.min("comp").alias("nbr_min"))
         )
-        new_labels = (
-            labels.join(nbr_min, "node", "left")
-            .select(
+        new_labels = materialize(
+            labels.join(nbr_min, "node", "left").select(
                 "node",
                 F.least(F.col("comp"), F.coalesce("nbr_min", "comp")).alias("comp"),
                 (F.coalesce("nbr_min", "comp") < F.col("comp")).alias("_changed"),
-            )
-        ).localCheckpoint(eager=True)
+            ),
+            "per-round labels: cut lineage, the driver reads _changed",
+            eager=True,
+        )
         changed = new_labels.filter(F.col("_changed")).limit(1).count()
         labels = new_labels.drop("_changed")
         if changed == 0:
@@ -141,7 +159,7 @@ def pagerank(
     Scale shape (same as ``connected_components``): each round is one
     equi-join (edges × ranks on src) + one groupBy(dst) sum — shuffle
     volume is |E| longs, never payloads; the edges-with-degree table is
-    pinned once; each round localCheckpoints to truncate lineage so the
+    pinned once; each round checkpoints to truncate lineage so the
     plan stays flat over ``iters``. Node count is the only driver
     scalar. Dangling nodes (no out-edges) leak their damped mass — the
     standard simplified formulation; symmetrize the edge list for the
@@ -149,11 +167,10 @@ def pagerank(
     construction."""
     if iters < 0:
         raise ValueError(f"iters must be >= 0, got {iters}")
-    nodes = (
-        edges.select(F.col(src).alias("node"))
-        .union(edges.select(F.col(dst).alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
+    nodes = materialize(
+        _endpoints(edges, src, dst).distinct(),
+        "node table, counted here and joined by every round",
+        eager=True,
     )
     n = nodes.count()
     if n == 0:
@@ -177,10 +194,10 @@ def pagerank(
         contrib_expr = (
             "CAST((CAST(rank AS DECIMAL(38,0)) * _w) div _deg AS LONG)"
         )
-    edged = (
-        e_sel.join(deg, F.col("_es") == F.col("_dn"))
-        .drop("_dn")
-        .localCheckpoint(eager=True)
+    edged = materialize(
+        e_sel.join(deg, F.col("_es") == F.col("_dn")).drop("_dn"),
+        "edges with out-degree, read by every round",
+        eager=True,
     )
     ranks = nodes.withColumn("rank", F.lit(scale // n).cast("long"))
     for _ in range(iters):
@@ -189,9 +206,8 @@ def pagerank(
             F.expr(contrib_expr).alias("_c"),
         )
         sums = contrib.groupBy("node").agg(F.sum("_c").alias("_s"))
-        ranks = (
-            nodes.join(sums, "node", "left")
-            .select(
+        ranks = materialize(
+            nodes.join(sums, "node", "left").select(
                 "node",
                 (
                     F.lit(teleport)
@@ -199,8 +215,9 @@ def pagerank(
                         f"({damping_num} * coalesce(_s, 0L)) div {damping_den}"
                     )
                 ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            "per-round ranks: cut lineage so the plan stays flat",
+            eager=True,
         )
     return ranks
 
@@ -228,43 +245,33 @@ def triangle_counts(
     edges + |E| adjacency payloads, never the wedge set (measured
     ~1.9× faster than the wedge-join form at sf0.1, where ~1M edges
     make tens of millions of wedges)."""
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        # read twice below (degree agg + orientation join); without the
-        # checkpoint each side re-executes the whole upstream edge
-        # builder (for the part graph: the lineitem collect_set +
-        # posexplode pipeline). |E| x 16 B — same posture as the
-        # `oriented` checkpoint further down.
-        .localCheckpoint(eager=True)
+    e = materialize(
+        _undirected(edges, src, dst).distinct(),
+        "read by the degree agg and the orientation join",
+        eager=True,
     )
-    deg = (
-        e.select(F.col("u").alias("node"))
-        .union(e.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
+    deg = _endpoints(e, "u", "v").groupBy("node").agg(F.count(F.lit(1)).alias("deg"))
     du = deg.select(F.col("node").alias("u"), F.col("deg").alias("du"))
     dv = deg.select(F.col("node").alias("v"), F.col("deg").alias("dv"))
     ranked = e.join(du, "u").join(dv, "v")
     u_first = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
-    oriented = ranked.select(
-        F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("s"),
-        F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("d"),
-    ).localCheckpoint(eager=True)  # read 3x below: edge list + both adj joins
+    oriented = materialize(
+        ranked.select(
+            F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("s"),
+            F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("d"),
+        ),
+        "oriented edges, read by the edge stream and both adjacency joins",
+        eager=True,
+    )
     adj = oriented.groupBy("s").agg(F.collect_list("d").alias("ns"))
     # The checkpointed edge list comes back AQE-coalesced to a handful
     # of partitions (measured: 3 at sf0.1) — fine for streaming scans,
     # but it serializes the Σ outdeg² per-edge intersect work onto that
     # many cores. Spread the SMALL (s, d) stream round-robin BEFORE the
     # adjacency payloads attach (16 B/row shuffle; the arrays join on
-    # afterwards via broadcast — never shuffled). Measured r8 at sf0.1:
+    # afterwards via broadcast — never shuffled). Measured at sf0.1:
     # warm 3.0 s → 1.0 s, value-identical.
     shuffle_parts = int(
         edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
@@ -352,10 +359,12 @@ def neardup_clusters(
     banded = dedup._banded(df, text_col, id_col, n, pairs_k, pairs_b)
     w = Window.partitionBy("band", "bucket")
     marked = banded.withColumn("_m", F.min(id_col).over(w))
-    # materialize the (tiny, O(N·bands)) marked table ONCE: edges and
-    # seed labels both read it, and without the pin each branch would
-    # re-run the whole MinHash signature aggregation
-    marked = marked.localCheckpoint(eager=True)
+    marked = materialize(
+        marked,
+        "O(docs x bands) marked table, read by the star edges and the seed "
+        "labels; each would re-run the MinHash aggregation",
+        eager=True,
+    )
     stars = (
         marked.filter(F.col(id_col) != F.col("_m"))
         .select(F.col("_m").alias("id_a"), F.col(id_col).alias("id_b"))
@@ -394,18 +403,23 @@ def label_propagation(
     neighbors (both directions of each edge), one
     (node, label)-count aggregation with map-side combine, one
     ``max_by`` per node — shuffles carry ids and labels only;
-    ``localCheckpoint`` truncates lineage per round like the other
+    an eager checkpoint truncates lineage per round like the other
     fixpoints. Isolated nodes (no edges) keep their own label."""
     if iters < 0:
         raise ValueError(f"iters must be >= 0, got {iters}")
-    und = (
+    und = materialize(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "edge list read by every round",
+        eager=True,
     )
     both = und.unionByName(und.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    nodes = both.select(F.col("u").alias("node")).distinct().localCheckpoint(eager=True)
+    nodes = materialize(
+        both.select(F.col("u").alias("node")).distinct(),
+        "node table joined by every round",
+        eager=True,
+    )
     labels = nodes.withColumn("label", F.col("node"))
     for _ in range(iters):
         neigh = both.join(
@@ -418,10 +432,12 @@ def label_propagation(
                 F.col("label"), F.struct(F.col("cnt"), (-F.col("label")).alias("_t"))
             ).alias("label")
         )
-        labels = (
-            nodes.join(best, "node", "left")
-            .select("node", F.coalesce("label", F.col("node")).alias("label"))
-            .localCheckpoint(eager=True)
+        labels = materialize(
+            nodes.join(best, "node", "left").select(
+                "node", F.coalesce("label", F.col("node")).alias("label")
+            ),
+            "per-round labels: cut lineage so the plan stays flat",
+            eager=True,
         )
     return labels
 
@@ -443,35 +459,34 @@ def kcore(
     over id pairs) and two semi-joins restricting edges to surviving
     endpoints — shuffles carry node ids only, never payloads. Rounds
     are bounded by the peel depth (degeneracy ordering depth), small
-    on real graphs; ``localCheckpoint`` truncates lineage per round.
+    on real graphs; an eager checkpoint truncates lineage per round.
     Raises after ``max_rounds`` without convergence (loud, like
     connected_components)."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    und = materialize(
+        _undirected(edges, src, dst).distinct(), "first round's edges", eager=True
     )
     cur = und.unionByName(und.select(F.col("v").alias("u"), F.col("u").alias("v")))
     prev_n = None
     for _ in range(max_rounds):
         deg = cur.groupBy("u").agg(F.count(F.lit(1)).alias("degree"))
-        keep = deg.filter(F.col("degree") >= k).localCheckpoint(eager=True)
+        keep = materialize(
+            deg.filter(F.col("degree") >= k),
+            "per-round survivors, counted by the driver and joined twice",
+            eager=True,
+        )
         n = keep.count()
         if n == prev_n:
             return keep.select(F.col("u").alias("node"), "degree")
         prev_n = n
         kn = keep.select("u")
-        cur = (
+        cur = materialize(
             cur.join(kn, "u", "left_semi")
             .join(kn.withColumnRenamed("u", "v"), "v", "left_semi")
-            .select("u", "v")
-            .localCheckpoint(eager=True)
+            .select("u", "v"),
+            "per-round surviving edges: cut lineage so the plan stays flat",
+            eager=True,
         )
     raise RuntimeError(
         f"kcore(k={k}) did not converge in {max_rounds} rounds"
@@ -499,7 +514,7 @@ def _pair_suffix_agg_arrow(
     sort aggregation in ~3 flat int64 arrays (~50 MB/task at sf0.1)
     instead of ~3 GB of UnsafeRow hash maps, which on a
     memory-overcommitted host is the difference between a 4 s and a
-    40 s run (measured r8). Sentinel rows (``_w < 0``, one per
+    40 s run (measured). Sentinel rows (``_w < 0``, one per
     adjacent pair, duplicates welcome) surface as ``min < 0`` and
     drop the group; sums add only positive weights, matching the SQL
     shape's ``sum(when(_w > 0, _w).otherwise(0))`` bit for bit.
@@ -597,16 +612,16 @@ def common_neighbors(
     10¹² wedges and near-zero signal per pair); None = exact.
     Jaccard is computed from exact integer degrees, rounded to 6.
 
-    Two-exchange shape (r7, same as :func:`adamic_adar`): the
+    Two-exchange shape (same as :func:`adamic_adar`): the
     symmetrized RAW pair stream (no ``distinct``) hash-repartitions
     on the middle once and ``collect_set`` dedups + builds the sorted
     adjacency array in the same aggregate; degree is ``size(_ns)``.
     Wedge pairs ship to the pair aggregation as PLAIN-long SUFFIX
     ARRAYS ``(id_a, [id_b...])`` partitioned on ``id_a`` and exploded
     post-shuffle (subset-of-grouping-keys partitioning keeps the
-    explode + both agg phases in one stage; the r6 shape carried
+    explode + both agg phases in one stage; carrying
     ``(neighbor, degree)`` structs through an exploded per-pair
-    stream — triple the exchange bytes), and the adjacency anti-join
+    stream would triple the exchange bytes), and the adjacency anti-join
     is FOLDED INTO the pair aggregation via sentinel rows (``_c =
     -1``, taken straight from the raw symmetrized stream — duplicates
     are harmless because the aggregate sums only positive counts and
@@ -614,10 +629,9 @@ def common_neighbors(
     dropped by one filter.
     Endpoint degrees for Jaccard are joined AFTER the count filter,
     onto the (tiny) surviving pair set, from a projection of the
-    SAME adjacency aggregate — the r6 objection to post-hoc degree
-    joins (they re-executed the whole edge-construction subtree) no
-    longer applies because Catalyst's ReuseExchange shares the one
-    middle-key exchange. The pair stream is pre-repartitioned on the
+    SAME adjacency aggregate; they do not re-execute the
+    edge-construction subtree because Catalyst's ReuseExchange shares
+    the one middle-key exchange. The pair stream is pre-repartitioned on the
     pair key: its dedup factor is near 1, so the map-side partial agg
     cannot shrink the shuffle and hashing raw pairs straight to their
     reducer keeps the partial pass same-stage.
@@ -626,20 +640,10 @@ def common_neighbors(
     sort-aggregation in place of the post-exchange ``explode →
     HashAggregate`` (value-identical, ~6x smaller per-task state, ids
     out as ``long``); any other id type keeps that SQL shape."""
-    sym = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        # read 3x (both union branches + the adjacency sentinels):
-        # materialize the canonicalized pair stream once instead of
-        # re-running the upstream edge builder per branch. The r7
-        # checkpoint REJECT (BASELINE.md) applied to the r6 join-heavy
-        # shape, where a stats-less RDD leaf demoted broadcasts; this
-        # shape's only joins sit ABOVE shuffles, which AQE replans
-        # from runtime sizes — A/B'd ~18% faster, value-identical.
-        .localCheckpoint(eager=True)
+    sym = materialize(
+        _undirected(edges, src, dst),
+        "read by both union branches and the adjacency sentinels",
+        eager=True,
     )
     both = sym.unionByName(sym.select(F.col("v").alias("u"), F.col("u").alias("v")))
     shuffle_parts = int(
@@ -725,13 +729,13 @@ def adamic_adar(
     wedge anyway); ``max_degree`` drops hub middles; pairs below
     ``min_score_micro`` drop.
 
-    Two-exchange shape (r7): the symmetrized RAW pair stream (no
+    Two-exchange shape: the symmetrized RAW pair stream (no
     ``distinct`` — duplicate observations are welcome) goes straight
     into one hash repartition on the middle and a ``collect_set``,
     which dedups and builds the sorted adjacency array in the SAME
-    aggregate; degree is then just ``size(_ns)`` (the r6 shape spent
-    separate exchanges on ``distinct`` + a degree ``groupBy`` + a
-    mid-table join to carry it). Wedges are shipped to the pair
+    aggregate; degree is then just ``size(_ns)``, with no separate
+    exchanges for ``distinct``, a degree ``groupBy`` or a mid-table
+    join to carry it. Wedges are shipped to the pair
     aggregation as SUFFIX ARRAYS ``(id_a, [id_b...], _w)`` — one row
     per (middle, position), ~8 bytes per pair — hash-partitioned on
     ``id_a`` alone and exploded AFTER the exchange; partitioning on a
@@ -749,16 +753,10 @@ def adamic_adar(
 
     Integer ids take the :func:`_pair_suffix_agg_arrow` kernel, as in
     :func:`common_neighbors`; any other id type keeps the SQL shape."""
-    sym = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        # read 3x — same materialize-once rationale as
-        # common_neighbors above (r7 A/B: ~18% faster, no joins below
-        # the shuffles for a stats-less leaf to demote)
-        .localCheckpoint(eager=True)
+    sym = materialize(
+        _undirected(edges, src, dst),
+        "read by both union branches and the adjacency sentinels",
+        eager=True,
     )
     both = sym.unionByName(sym.select(F.col("v").alias("u"), F.col("u").alias("v")))
     shuffle_parts = int(
@@ -842,20 +840,19 @@ def hits(
     Scale shape: per round, two equi-joins of the edge list against a
     (node, value) table and two groupBy sums — shuffle volume is |E|
     longs per half-round; the 1-row L1 total is broadcast; the edge
-    list is pinned once; per-round localCheckpoint keeps the plan
+    list is pinned once; a per-round checkpoint keeps the plan
     flat. Nodes with no in-edges read auth 0 (no out-edges: hub 0)."""
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
-    e = (
-        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    e = materialize(
+        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d")).distinct(),
+        "edge list read by both half-rounds of every round",
+        eager=True,
     )
-    nodes = (
-        e.select(F.col("_s").alias("node"))
-        .union(e.select(F.col("_d").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
+    nodes = materialize(
+        _endpoints(e, "_s", "_d").distinct(),
+        "node table joined by both half-rounds of every round",
+        eager=True,
     )
     hub = nodes.withColumn("hub", F.lit(scale).cast("long"))
     auth = None
@@ -864,7 +861,7 @@ def hits(
             F.col("_d").alias("node")
         ).agg(F.sum("hub").alias("_ra"))
         tot_a = raw_a.agg(F.sum("_ra").alias("_ta"))
-        auth = (
+        auth = materialize(
             nodes.join(raw_a, "node", "left")
             .join(F.broadcast(tot_a))
             .select(
@@ -876,14 +873,15 @@ def hits(
                     ),
                     F.lit(0).cast("long"),
                 ).alias("auth"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            "per-round authority scores: cut lineage so the plan stays flat",
+            eager=True,
         )
         raw_h = e.join(auth, e["_d"] == auth["node"]).groupBy(
             F.col("_s").alias("node")
         ).agg(F.sum("auth").alias("_rh"))
         tot_h = raw_h.agg(F.sum("_rh").alias("_th"))
-        hub = (
+        hub = materialize(
             nodes.join(raw_h, "node", "left")
             .join(F.broadcast(tot_h))
             .select(
@@ -895,8 +893,9 @@ def hits(
                     ),
                     F.lit(0).cast("long"),
                 ).alias("hub"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            "per-round hub scores: cut lineage so the plan stays flat",
+            eager=True,
         )
     return hub.join(auth, "node").select("node", "hub", "auth")
 
@@ -983,17 +982,10 @@ def modularity(
     all id-keyed shuffles; the verdict is one row. Pair with
     :func:`label_propagation` / :func:`neardup_clusters` to score the
     clustering they produced."""
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        # read twice below (intra-edge tagging + degree agg); without
-        # the checkpoint each side re-executes the whole upstream edge
-        # builder — same posture as triangle_counts' `e` checkpoint.
-        .localCheckpoint(eager=True)
+    und = materialize(
+        _undirected(edges, src, dst).distinct(),
+        "read by the intra-edge tagging and the degree agg",
+        eager=True,
     )
     lab = labels.select(
         F.col(node_col).alias("_n"), F.col(label_col).alias("_l")
@@ -1005,12 +997,7 @@ def modularity(
         F.count(F.lit(1)).alias("m"),
         F.sum((F.col("_lu") == F.col("_lv")).cast("long")).alias("intra_edges"),
     )
-    deg = (
-        und.select(F.col("u").alias("_n"))
-        .union(und.select(F.col("v").alias("_n")))
-        .groupBy("_n")
-        .agg(F.count(F.lit(1)).alias("_d"))
-    )
+    deg = _endpoints(und, "u", "v", "_n").groupBy("_n").agg(F.count(F.lit(1)).alias("_d"))
     dsum = (
         deg.join(lab, "_n")
         .groupBy("_l")
@@ -1048,26 +1035,13 @@ def clustering_coefficient(
     Composition: :func:`triangle_counts` (degree-ordered wedge join,
     O(√|E|) fan-out) + one degree aggregation + an id-keyed join —
     nothing new shuffles beyond the triangle pass."""
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        # read by the triangle pass AND the degree agg below; the
-        # checkpoint stops both from re-running the upstream edge
-        # builder (triangle_counts checkpoints again after its own
-        # no-op re-normalization — that one reads from this one)
-        .localCheckpoint(eager=True)
+    und = materialize(
+        _undirected(edges, src, dst).distinct(),
+        "read by the triangle pass and the degree agg",
+        eager=True,
     )
     tri = triangle_counts(und, "u", "v")
-    deg = (
-        und.select(F.col("u").alias("node"))
-        .union(und.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    )
+    deg = _endpoints(und, "u", "v").groupBy("node").agg(F.count(F.lit(1)).alias("degree"))
     return (
         deg.join(tri, "node", "left")
         .select(
@@ -1106,17 +1080,9 @@ def degree_powerlaw(
     question answered without materializing anything per-pair."""
     if d_min < 1:
         raise ValueError(f"d_min must be >= 1, got {d_min}")
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
+    und = _undirected(edges, src, dst).distinct()
     deg = (
-        und.select(F.col("u").alias("node"))
-        .union(und.select(F.col("v").alias("node")))
+        _endpoints(und, "u", "v")
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("_d"))
         .filter(F.col("_d") >= d_min)

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..io import ensure_min_partitions as _spread
+from ._materialize import materialize
 from .text import hash64, tokenize
 
 __all__ = [
@@ -81,26 +82,18 @@ def dsir_logratio_weights(
     tgt_toks = _bucketed_tokens(target_df, text_col, id_col, buckets)
     # per-doc counts are computed anyway for the final score — the raw
     # pool's bucket distribution rolls up from THEM (256-row second
-    # aggregation) instead of re-tokenizing the whole corpus. That
-    # reuse must be MATERIALIZED: Catalyst never fired ReuseExchange on
-    # the shared subtree (measured r8 — the executed plan carried FIVE
-    # tokenize Generates: per_doc + rc + rtot re-derived the raw pool,
-    # tc + ttot the target). per_doc is ~buckets rows per doc — orders
-    # of magnitude smaller than the token stream it summarizes — so one
-    # localCheckpoint buys every downstream consumer (guide §2.4
-    # diamond reuse / §3.3 materialize-to-truncate); tc is a
-    # ``buckets``-row table, checkpointed so its total doesn't
-    # re-tokenize the target either. One tokenize pass per corpus.
-    per_doc = (
-        raw_toks.groupBy(id_col, "_b")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .localCheckpoint(eager=True)
+    # aggregation) instead of re-tokenizing the whole corpus.
+    per_doc = materialize(
+        raw_toks.groupBy(id_col, "_b").agg(F.count(F.lit(1)).alias("_n")),
+        "per-doc bucket counts, read by the score and the pool totals; "
+        "Catalyst does not reuse the tokenize exchange",
+        eager=True,
     )
     rc = per_doc.groupBy("_b").agg(F.sum("_n").alias("_rc"))
-    tc = (
-        tgt_toks.groupBy("_b")
-        .agg(F.count(F.lit(1)).alias("_tc"))
-        .localCheckpoint(eager=True)
+    tc = materialize(
+        tgt_toks.groupBy("_b").agg(F.count(F.lit(1)).alias("_tc")),
+        "buckets-row target table, read by the weights and the total",
+        eager=True,
     )
     rtot = rc.agg(F.sum("_rc").alias("_R"))
     ttot = tc.agg(F.sum("_tc").alias("_T"))
@@ -198,15 +191,12 @@ def ngram_nll(
     the per-doc sum is exact under any aggregation order."""
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
-    lm = (
+    lm = materialize(
         _bucketed_ngrams(lm_df, text_col, id_col, n, buckets)
         .groupBy("_b")
-        .agg(F.count(F.lit(1)).alias("_c"))
-        # ``buckets`` rows, read by the weight table AND the total —
-        # checkpointed so the LM corpus tokenizes once, not per
-        # consumer (Catalyst does not reuse the shared exchange;
-        # measured r8 on the sibling dsir shape)
-        .localCheckpoint(eager=True)
+        .agg(F.count(F.lit(1)).alias("_c")),
+        "buckets-row LM table, read by the weights and the total",
+        eager=True,
     )
     tot = lm.agg(F.sum("_c").alias("_T"))
     fb = float(buckets)
@@ -302,7 +292,7 @@ def bm25_scores(
     any shuffle (a scan-rate ``isin``); doc lengths are one partial-agg
     pass, CHECKPOINTED because three consumers read it (the corpus
     totals, the per-term join) and Catalyst re-tokenized the corpus per
-    consumer instead of reusing the exchange (measured r8: 4 Generate
+    consumer instead of reusing the exchange (measured: 4 Generate
     passes in the executed plan; the doc-length table is one row per
     doc — orders of magnitude smaller than the token stream). N/avgdl
     is a broadcast one-row aggregate; per-term document frequencies
@@ -313,10 +303,10 @@ def bm25_scores(
 
     terms = [t.lower() for t in query_terms]
     toks = _spread(df).select(F.col(id_col), F.explode(tokenize(text_col)).alias("term"))
-    dl = (
-        toks.groupBy(id_col)
-        .agg(F.count(F.lit(1)).alias("_dl"))
-        .localCheckpoint(eager=True)
+    dl = materialize(
+        toks.groupBy(id_col).agg(F.count(F.lit(1)).alias("_dl")),
+        "one doc-length row per doc, read by the corpus totals and the score",
+        eager=True,
     )
     corpus = dl.agg(
         F.count(F.lit(1)).alias("_N"), F.sum("_dl").alias("_TOT")

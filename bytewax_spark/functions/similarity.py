@@ -859,6 +859,8 @@ def knn_label_agreement_lsh(
     expected bucket size stays constant as the corpus grows. A row
     whose vector is NULL or has zero norm has no cosine: it is dropped
     before scoring, so it is neither audited nor anyone's neighbor.
+    A NULL label is audited and counted as a neighbor, but it agrees
+    with no label, NULL included (SQL ``=``).
 
     Scale shape: ONE shuffle on the bucket key (never a broadcast
     nested loop over the corpus) into one ``applyInPandas`` kernel per
@@ -897,6 +899,9 @@ def knn_label_agreement_lsh(
             return pd.DataFrame({c: pd.Series(dtype="object") for c in cols})
         ids = pdf[id_col].to_numpy()
         labs = pdf[label_col].to_numpy()
+        # SQL equality: a NULL label agrees with nothing (numpy's
+        # object == counts None == None)
+        known = pd.notna(labs)
         blk = max(1, min(n, block_bytes // (n * 8)))
         rows = []
         for s in range(0, n, blk):
@@ -913,7 +918,7 @@ def knn_label_agreement_lsh(
                     idx = np.lexsort((ids, -c))
                     sel = idx[idx != i][:k]
                 nn = len(sel)
-                ns = int((labs[sel] == labs[i]).sum())
+                ns = int(((labs[sel] == labs[i]) & known[sel]).sum()) if known[i] else 0
                 rows.append(
                     (ids[i], labs[i], nn, ns, ns * 1_000_000 // nn)
                 )

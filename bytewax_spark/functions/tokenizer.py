@@ -15,7 +15,7 @@ Spark-first decomposition:
 - Each merge round is ONE aggregation over that table (explode
   adjacent symbol pairs weighted by word count, argmax) plus one
   map-side array fold applying the merge. Driver state per round is a
-  single row (the winning pair); the word table localCheckpoints each
+  single row (the winning pair); the word table is checkpointed each
   round so the plan stays flat across rounds (same pattern as the
   Pregel loops in ``functions/graph.py``).
 - Encoding applies the learned merge list inside an Arrow-batched
@@ -35,6 +35,7 @@ from typing import Iterator
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ._materialize import materialize
 from .text import tokenize
 
 __all__ = ["bpe_pair_counts", "bpe_train", "bpe_encode"]
@@ -129,7 +130,9 @@ def bpe_train(df: DataFrame, text_col: str, n_merges: int = 32) -> DataFrame:
     if n_merges < 1:
         raise ValueError(f"n_merges must be >= 1, got {n_merges}")
     spark = df.sparkSession
-    words = _word_table(df, text_col).localCheckpoint(eager=True)
+    words = materialize(
+        _word_table(df, text_col), "word-frequency table, round 0", eager=True
+    )
     out: list[tuple[int, str, str, int]] = []
     for rank in range(1, n_merges + 1):
         top = (
@@ -146,9 +149,11 @@ def bpe_train(df: DataFrame, text_col: str, n_merges: int = 32) -> DataFrame:
             break
         l, r, pc = top[0]["l"], top[0]["r"], int(top[0]["pc"])
         out.append((rank, l, r, pc))
-        words = words.withColumn(
-            "syms", _apply_merge(F.col("syms"), l, r)
-        ).localCheckpoint(eager=True)
+        words = materialize(
+            words.withColumn("syms", _apply_merge(F.col("syms"), l, r)),
+            "per-round word table: cut lineage so the plan stays flat",
+            eager=True,
+        )
     return spark.createDataFrame(
         out, "rank int, left string, right string, pair_count bigint"
     )

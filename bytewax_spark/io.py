@@ -232,23 +232,34 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     A TIMESTAMP(NANOS) column, which Spark cannot read as a timestamp,
     is read as its ``long`` nanoseconds and returned as
     ``TIMESTAMP_NTZ``."""
+    return _from_nanos(*_parquet_scan(spark, path))
+
+
+def _parquet_scan(spark: SparkSession, path: str) -> tuple[DataFrame, list[str]]:
+    """The read behind :func:`read_parquet`, before its nanosecond
+    conversion: the DataFrame, with each TIMESTAMP(NANOS) column still
+    its ``long`` nanoseconds, and the names of those columns."""
     schema, nanos = _footer_schema(spark, path)
     if schema is not None:
-        df = spark.read.schema(schema).parquet(path)
-    elif nanos:
-        key = "spark.sql.legacy.parquet.nanosAsLong"
-        prev = spark.conf.get(key, None)
-        spark.conf.set(key, "true")
-        try:
-            # the flag is only read while the schema is inferred
-            df = spark.read.parquet(path)
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
-    else:
-        df = spark.read.parquet(path)
+        return spark.read.schema(schema).parquet(path), nanos
+    if not nanos:
+        return spark.read.parquet(path), nanos
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "true")
+    try:
+        # the flag is only read while the schema is inferred
+        return spark.read.parquet(path), nanos
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+
+
+def _from_nanos(df: DataFrame, nanos: list[str]) -> DataFrame:
+    """``df`` with each ``long`` nanosecond column in ``nanos`` as
+    ``TIMESTAMP_NTZ`` (batch or streaming)."""
     for c in nanos:
         df = df.withColumn(
             c, F.expr(f"CAST(timestamp_micros(`{c}` div 1000) AS TIMESTAMP_NTZ)")

@@ -53,16 +53,20 @@ class ParquetSource(Source):
 
     def __init__(self, path: str, streaming: bool = False, schema: Any | None = None) -> None:
         self.path, self.streaming, self.schema = path, streaming, schema
+        self._nanos: list[str] = []
 
     def to_df(self) -> DataFrame:
-        from bytewax_spark.io import read_parquet
+        from bytewax_spark.io import _from_nanos, _parquet_scan, read_parquet
 
         spark = self._spark()
         if self.streaming:
             if self.schema is None:
-                # streaming file sources require a schema; take the batch one
-                self.schema = read_parquet(spark, self.path).schema
-            return spark.readStream.schema(self.schema).parquet(self.path)
+                # streaming file sources require a schema: the batch
+                # read's, nanosecond timestamps still as their long value
+                raw, self._nanos = _parquet_scan(spark, self.path)
+                self.schema = raw.schema
+            stream = spark.readStream.schema(self.schema).parquet(self.path)
+            return _from_nanos(stream, self._nanos)
         if self.schema is None:
             return read_parquet(spark, self.path)
         return spark.read.schema(self.schema).parquet(self.path)

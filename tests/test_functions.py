@@ -652,23 +652,6 @@ def test_quantize_embeddings_int8(spark, sf_dir):
     assert "EvalPython" not in plan
 
 
-def test_minhash_signature_cache_is_bounded(spark, sf_dir):
-    """Repeated minhash_lsh_pairs runs hold at most ONE persisted
-    signature table; release_signature_caches() frees the last one."""
-    docs = load(spark, sf_dir, "documents")
-
-    def n_cached() -> int:
-        return spark.sparkContext._jsc.getPersistentRDDs().size()
-
-    dedup.release_signature_caches()
-    base = n_cached()
-    for _ in range(3):
-        dedup.minhash_lsh_pairs(docs, "text", "doc_id", n=2).count()
-    assert n_cached() <= base + 1
-    dedup.release_signature_caches()
-    assert n_cached() <= base
-
-
 def test_hard_negatives_excludes_anchor_label(spark, sf_dir):
     emb = load(spark, sf_dir, "embeddings")
     probe = emb.filter(F.col("vec_id") == 0).first()

@@ -331,6 +331,41 @@ def test_knn_lsh_arrow_and_sql_impls_agree(spark):
     assert len(got[1]) > 0
 
 
+def test_knn_lsh_null_labels_agree_with_nothing(spark):
+    """String labels with NULL probes and NULL neighbours: a NULL label
+    matches no label, NULL included — the registry oracle's
+    ``CASE WHEN nlab = plab``. Numpy's object ``==`` counted two NULLs
+    as agreeing."""
+    import random
+
+    from bytewax_spark.functions.similarity import knn_label_agreement_lsh
+
+    rng = random.Random(3)
+    labels = {0: ["x", "x", "x", None, "x", "x"], 1: [None, None, None, "y", None, "y"]}
+    rows = []
+    for c, labs in labels.items():
+        base = [1.0, 0.0, 0.0, 0.0] if c == 0 else [0.0, 1.0, 0.0, 0.0]
+        for j, lab in enumerate(labs):
+            vec = [x + rng.uniform(-0.05, 0.05) for x in base]
+            rows.append((c * 100 + j, vec, lab))
+    df = spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>, label string"
+    )
+    kw = dict(k=3, n_planes=2, dims=4, seed=11)
+    got = spark_rows(
+        knn_label_agreement_lsh(df, "embedding", "vec_id", "label", **kw)
+    )
+    want = duckref.knn_lsh(
+        duckref.with_bucket(df, 4, 2, 11), "embedding", "vec_id", "label", "bucket", 3
+    )
+    assert got == want
+    # columns sort as (agree_ppm, label, n_nbrs, n_same, vec_id); NULL
+    # normalizes to "∅". Every NULL-label probe here has NULL
+    # neighbours, and agrees with none of them.
+    null_rows = [r for r in got[1] if r[1] == "∅"]
+    assert len(null_rows) == 5 and all(r[3] == "0" for r in null_rows)
+
+
 def test_knn_lsh_drops_null_and_zero_norm_vectors(spark):
     """A NULL or zero-norm vector has no cosine: the row is dropped
     before scoring, so it gets no verdict and is nobody's neighbor (a

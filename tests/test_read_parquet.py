@@ -162,6 +162,29 @@ def test_streaming_parquet_source_takes_the_footer_schema(spark, tmp_path):
     assert src.schema == spark.read.parquet(str(tmp_path)).schema
 
 
+def test_streaming_parquet_source_drains_a_nanosecond_file(spark, tmp_path):
+    """A streamed nanosecond file scans its INT64 column as ``long`` and
+    converts it as the batch read does (a ``TIMESTAMP_NTZ`` read schema
+    failed once the stream ran)."""
+    from bytewax_spark.sources import ParquetSource
+
+    src_dir = tmp_path / "in"
+    src_dir.mkdir()
+    _nano_file(str(src_dir / "0.parquet"))
+    df = ParquetSource(str(src_dir), streaming=True).to_df()
+    assert df.dtypes == [("id", "bigint"), ("ts", "timestamp_ntz")]
+    got = []
+    q = (
+        df.writeStream.foreachBatch(lambda b, _: got.extend(b.collect()))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert sorted((r.id, pd.Timestamp(r.ts)) for r in got) == NANO_ROWS
+
+
 @pytest.mark.parametrize(
     "name, jobs",
     [(n, 0) for n in CORE]

@@ -422,7 +422,6 @@ def test_minhash_bag_distinguishes_repetition(spark):
     out = dd.minhash_lsh_verified_pairs(
         df, "text", "doc_id", threshold=0.0, shingler=bag_shingles
     ).collect()
-    dd.release_signature_caches()
     assert len(out) == 1
     assert abs(out[0]["jaccard"] - 0.8) < 1e-9
 
