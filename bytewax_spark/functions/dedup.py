@@ -480,10 +480,10 @@ def minhash_lsh_pairs(
     bucket join replaces the quadratic shingle join; callers verify
     candidates with exact Jaccard on the candidate set only.
 
-    Shape (r8): SIGNATURE-CLASS pairing, distinct-free. The r7
-    doc-level self-join + ``distinct`` melted down on dup-heavy
-    corpora: on the sf1 bench data (50k docs, of which whole clusters
-    are near-identical) the bucket join materialized 549M pair slots
+    Shape: SIGNATURE-CLASS pairing, distinct-free. A doc-level
+    self-join + ``distinct`` melts down on dup-heavy corpora: on the
+    sf1 bench data (50k docs, of which whole clusters are
+    near-identical) the bucket join materialized 549M pair slots
     and the distinct shuffled+hashed ~275M rows — 385 s on the bench
     host, with the hottest (band, bucket) holding 19,910 docs. But
     those 50k docs collapse to 2,646 DISTINCT full signatures, so:
@@ -509,8 +509,8 @@ def minhash_lsh_pairs(
     only at its first shared band), so no ``distinct`` — the 275M-row
     exchange and its 200M-entry hash maps are gone; the only shuffles
     left are the signature aggregation, the tiny class agg, and the
-    class-level join. Value-identical to the r7 shape (same candidate
-    set; oracle hash-exact), measured 385 s → ~8 s at sf1."""
+    class-level join. Value-identical to the doc-level self-join (same
+    candidate set; oracle hash-exact), measured 385 s → ~8 s at sf1."""
     shuffle_parts = int(
         df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
     )
@@ -817,7 +817,7 @@ def simhash(df: DataFrame, text_col: str, id_col: str, bits: int = 16) -> DataFr
     fingerprint (or on rotated bands for hamming>0 tolerance) — no
     pairwise join.
 
-    Shape (r7, the ``_minhash_wide`` posture): explode DISTINCT tokens
+    Shape (the ``_minhash_wide`` posture): explode DISTINCT tokens
     to rows, hash each token ONCE in a whole-stage-codegen projection,
     then one ``groupBy(id)`` whose ``bits`` ``sum`` votes all run
     map-side partial aggregation — the shuffle carries one
@@ -825,7 +825,7 @@ def simhash(df: DataFrame, text_col: str, id_col: str, bits: int = 16) -> DataFr
     form (``aggregate`` HOF per bit) evaluated interpreted AND inlined
     the full tokenize+md5 pipeline into every bit's lambda (no
     cross-expression CSE on the CodegenFallback path): 16 bits × the
-    whole corpus re-hashed 16× (measured in the r7 plan dump — 16
+    whole corpus re-hashed 16× (measured in its plan dump — 16
     ``aggregate(transform(...md5...))`` copies in one projection).
     ``explode_outer`` keeps zero-token docs (null/empty text): their
     ``_h`` is null, votes stay null (the ±1 term guards on non-null),

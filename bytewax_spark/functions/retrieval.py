@@ -242,7 +242,7 @@ def tfidf_top_terms(
     frequencies come from a count window PARTITIONED BY TERM over the
     tf table itself — not a separate aggregate joined back, which
     Catalyst planned as a SECOND full tokenize+explode of the corpus
-    (measured r8: ReuseExchange never fired on the shared tf subtree;
+    (measured: ReuseExchange never fired on the shared tf subtree;
     the plan carried 2 Generate passes). One tokenize pass, one window
     (guide §2.4: two operations keyed the same data share one
     computation). Corpus size N is a broadcast one-row aggregate. The

@@ -525,7 +525,7 @@ def gapfill_interpolate(
     Per-bucket values are floor-quantized to micros BEFORE filling
     (sum per bucket), so results are engine/partitioning exact.
 
-    Shape (r7): every grid cell is fully determined by its BRACKETING
+    Shape: every grid cell is fully determined by its BRACKETING
     observation pair, so the fill is generated straight from
     consecutive observations — one ``lead`` window over the OBSERVED
     buckets (sparse: |observations|, never the span) and one

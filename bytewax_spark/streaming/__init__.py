@@ -51,6 +51,17 @@ from pyspark.errors import PySparkRuntimeError
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    DoubleType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
 from bytewax_spark.dataflow import KeyedStream
 from bytewax_spark.operators import _require_keyed
@@ -83,7 +94,14 @@ class StatefulBatchLogic(ABC):
     pandas DataFrame and returns ``(emit_df_or_None, is_complete)``;
     ``is_complete=True`` discards the key's state. ``snapshot`` must
     return something picklable; ``builder`` receives the unpickled
-    snapshot (or None) to resume."""
+    snapshot (or None) to resume.
+
+    Batch contract: on finite input each key gets ONE ``on_batch`` call
+    holding all of its rows, then ``on_eof`` (unless that call
+    completed the key). A batch run is therefore a stream of one
+    micro-batch, and logic never branches on the mode: whatever
+    ``on_batch`` emits after its last micro-batch is the batch
+    result."""
 
     RETAIN = False
     DISCARD = True
@@ -136,6 +154,23 @@ def _ensure_key(pdf: pd.DataFrame | None, key_col: str, key_val: Any) -> pd.Data
         pdf = pdf.copy()
         pdf[key_col] = key_val
     return pdf
+
+
+def _out_schema(df: DataFrame, *fields: str | tuple[str, DataType]) -> StructType:
+    """An output schema built from ``df``'s fields: a name keeps that
+    input ``StructField`` as is, a ``(name, type)`` pair adds a new
+    nullable field. Always a new ``StructType``: ``df.schema`` is
+    cached on the DataFrame and must not be added to."""
+    src = {f.name: f for f in df.schema.fields}
+    return StructType(
+        [src[f] if isinstance(f, str) else StructField(f[0], f[1]) for f in fields]
+    )
+
+
+def _tdiv(a: int, b: int) -> int:
+    # truncate toward zero, matching SQL div / DuckDB //
+    q = abs(a) // b
+    return q if a >= 0 else -q
 
 
 def stateful_batch(
@@ -313,8 +348,8 @@ def stateful_map_stream(
             return self.state
 
     up = _require_keyed(step_id, up)
-    in_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in up.df.schema.fields)
-    return stateful_batch(step_id, up, _SMap, schema=f"{in_schema}, {out_col} {out_type}")
+    schema = _out_schema(up.df, *up.df.columns, (out_col, DataType.fromDDL(out_type)))
+    return stateful_batch(step_id, up, _SMap, schema=schema)
 
 
 def stateful_flat_map_stream(
@@ -356,10 +391,8 @@ def stateful_flat_map_stream(
             return self.state
 
     up = _require_keyed(step_id, up)
-    key_type = {f.name: f.dataType.simpleString() for f in up.df.schema.fields}[up.key_col]
-    return stateful_batch(
-        step_id, up, _SFMap, schema=f"{up.key_col} {key_type}, {out_col} {out_type}"
-    )
+    schema = _out_schema(up.df, up.key_col, (out_col, DataType.fromDDL(out_type)))
+    return stateful_batch(step_id, up, _SFMap, schema=schema)
 
 
 def heavy_hitters_stream(
@@ -380,16 +413,15 @@ def heavy_hitters_stream(
     rank in ``functions/topk.py``: exact top-k needs the whole corpus
     (a shuffle per query); this holds O(capacity) state per key
     FOREVER — at 100 TB/day the sketch is the only option for "top
-    domains right now" dashboards. Streaming emits the running top-k
-    after each micro-batch (downstream takes the latest); batch mode
-    emits once at EOF. Output: (key, item, count_est, err_bound).
+    domains right now" dashboards. Emits the running top-k after each
+    micro-batch (downstream takes the latest; in batch mode that is the
+    top-k over all rows). Output: (key, item, count_est, err_bound).
     With ``capacity`` >= distinct items, counts are exact and
     err_bound is 0."""
     if capacity is None:
         capacity = 10 * k
     if capacity < k:
         raise ValueError(f"capacity {capacity} < k {k}")
-    emit_each = bool(up.df.isStreaming)
 
     class _SpaceSaving(StatefulBatchLogic):
         def __init__(self, snap):
@@ -410,12 +442,6 @@ def heavy_hitters_stream(
                     )
                     del self.counters[victim]
                     self.counters[it] = (cmin + 1, cmin)
-            return (self._top(), self.RETAIN) if emit_each else (None, self.RETAIN)
-
-        def on_eof(self):
-            return self._top(), self.DISCARD
-
-        def _top(self):
             top = sorted(
                 self.counters.items(), key=lambda kv: (-kv[1][0], str(kv[0]))
             )[:k]
@@ -425,20 +451,16 @@ def heavy_hitters_stream(
                     "count_est": [t[1][0] for t in top],
                     "err_bound": [t[1][1] for t in top],
                 }
-            )
+            ), self.RETAIN
 
         def snapshot(self):
             return self.counters
 
     up = _require_keyed(step_id, up)
-    key_type = {f.name: f.dataType.simpleString() for f in up.df.schema.fields}[up.key_col]
-    item_type = {f.name: f.dataType.simpleString() for f in up.df.schema.fields}[item_col]
-    return stateful_batch(
-        step_id,
-        up,
-        _SpaceSaving,
-        schema=f"{up.key_col} {key_type}, {item_col} {item_type}, count_est long, err_bound long",
+    schema = _out_schema(
+        up.df, up.key_col, item_col, ("count_est", LongType()), ("err_bound", LongType())
     )
+    return stateful_batch(step_id, up, _SpaceSaving, schema=schema)
 
 
 def collect_stream(
@@ -467,6 +489,9 @@ def collect_stream(
     """
     if max_size < 1:
         raise ValueError("max_size must be >= 1")
+    if timeout < timedelta(milliseconds=1):
+        # the processing-time timer counts whole milliseconds
+        raise ValueError(f"timeout must be at least 1 ms, got {timeout!r}")
 
     class _Collect(StatefulBatchLogic):
         def __init__(self, snap):
@@ -502,8 +527,7 @@ def collect_stream(
             return self.buf
 
     up = _require_keyed(step_id, up)
-    vtype = up.df.schema[value_col].dataType.simpleString()
-    schema = f"{up.key_col} {up.df.schema[up.key_col].dataType.simpleString()}, values array<{vtype}>"
+    schema = _out_schema(up.df, up.key_col, ("values", ArrayType(up.df.schema[value_col].dataType)))
     return stateful_batch(step_id, up, _Collect, schema=schema, timers="processing")
 
 
@@ -585,8 +609,8 @@ def distinct_count_stream(
     error (p=12 ≈ 1.6%), this is the "distinct users right now per
     segment" dashboard operator for unbounded streams.
 
-    Streaming emits the running ``(key, est)`` after each micro-batch
-    (downstream takes the latest); batch mode emits once at EOF. The
+    Emits the running ``(key, est)`` after each micro-batch
+    (downstream takes the latest; in batch mode, one row per key). The
     hash and estimator are EXACTLY the batch ones
     (:func:`bytewax_spark.functions.sketches.hll_build` /
     ``hll_estimate``: md5-derived 60-bit hash, integer-scaled harmonic
@@ -603,7 +627,6 @@ def distinct_count_stream(
     wbits = 60 - p
     alpha = 0.7213 / (1.0 + 1.079 / m)
     scale = float(1 << (wbits + 1))
-    emit_each = bool(up.df.isStreaming)
 
     class _HLL(StatefulBatchLogic):
         def __init__(self, snap):
@@ -617,27 +640,17 @@ def distinct_count_stream(
                 rank = wbits + 1 if w == 0 else wbits - (w.bit_length() - 1)
                 if rank > self.regs.get(idx, 0):
                     self.regs[idx] = rank
-            return (self._est(), self.RETAIN) if emit_each else (None, self.RETAIN)
-
-        def on_eof(self):
-            return self._est(), self.DISCARD
-
-        def _est(self):
-            nz = len(self.regs)
+            v = m - len(self.regs)
             ssum = sum(1 << (wbits + 1 - r) for r in self.regs.values())
-            v = m - nz
-            z = (v * scale + ssum) / scale
-            raw = alpha * m * m / z
+            raw = alpha * m * m / ((v * scale + ssum) / scale)
             est = m * math.log(m / v) if (raw <= 2.5 * m and v > 0) else raw
-            return pd.DataFrame({"est": [int(round(est))]})
+            return pd.DataFrame({"est": [int(round(est))]}), self.RETAIN
 
         def snapshot(self):
             return self.regs
 
     up = _require_keyed(step_id, up)
-    schema = (
-        f"{up.key_col} {up.df.schema[up.key_col].dataType.simpleString()}, est bigint"
-    )
+    schema = _out_schema(up.df, up.key_col, ("est", LongType()))
     return stateful_batch(step_id, up, _HLL, schema=schema)
 
 
@@ -703,17 +716,11 @@ def frequency_cap_stream(
                         self.counters[(d, b)] = self.counters.get((d, b), 0) + 1
             return (pdf.iloc[keep] if keep else None), self.RETAIN
 
-        def on_eof(self):
-            return None, self.DISCARD
-
         def snapshot(self):
             return self.counters
 
     up = _require_keyed(step_id, up)
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in up.df.schema.fields
-    )
-    return stateful_batch(step_id, up, _FreqCap, schema=schema)
+    return stateful_batch(step_id, up, _FreqCap, schema=up.df.schema)
 
 
 def funnel_stream(
@@ -730,7 +737,8 @@ def funnel_stream(
     step-i event at-or-after its step-(i-1) time, the same sequential
     rule as the batch ``functions.behavior.funnel``), a row
     ``(key, step_idx, step, ts)`` is emitted; a key that completes the
-    last step DISCARDS its state (the conversion is final).
+    last step keeps its pointer past it, so its later rows emit
+    nothing in any micro-batch (the conversion is final).
 
     Rows are replayed in timestamp order WITHIN each micro-batch,
     scanning equal-timestamp GROUPS rather than individual rows: the
@@ -744,19 +752,16 @@ def funnel_stream(
     across micro-batches is arrival order — the standard
     streaming-funnel semantics. When the input is globally ts-ordered
     (or batch mode, where each key sees all its rows at once), the
-    advancement times equal the batch operator's — tested.
-    Batch mode emits the full trajectory at EOF."""
+    advancement times equal the batch operator's — tested."""
     if not steps:
         raise ValueError("funnel_stream needs at least one step")
     last = len(steps) - 1
-    emit_each = bool(up.df.isStreaming)
     sort_cols = [ts_col] + ([tiebreak_col] if tiebreak_col else [])
 
     class _Funnel(StatefulBatchLogic):
         def __init__(self, snap):
             # (next step index to look for, time of last reached step)
             self.nxt, self.t = snap if snap is not None else (0, None)
-            self.pending: list[tuple] = []
 
         def on_batch(self, pdf):
             out = []
@@ -770,32 +775,16 @@ def funnel_stream(
                     out.append((self.nxt + 1, steps[self.nxt], ts))
                     self.t = ts
                     self.nxt += 1
-            done = self.nxt > last
-            if emit_each:
-                emit = (
-                    pd.DataFrame(out, columns=["step_idx", "step", ts_col])
-                    if out
-                    else None
-                )
-                return emit, (self.DISCARD if done else self.RETAIN)
-            self.pending.extend(out)
-            return None, self.RETAIN
-
-        def on_eof(self):
-            if not self.pending:
-                return None, self.DISCARD
-            return (
-                pd.DataFrame(self.pending, columns=["step_idx", "step", ts_col]),
-                self.DISCARD,
-            )
+            emit = pd.DataFrame(out, columns=["step_idx", "step", ts_col]) if out else None
+            return emit, self.RETAIN
 
         def snapshot(self):
             return (self.nxt, self.t)
 
     up = _require_keyed(step_id, up)
-    key_t = up.df.schema[up.key_col].dataType.simpleString()
-    ts_t = up.df.schema[ts_col].dataType.simpleString()
-    schema = f"{up.key_col} {key_t}, step_idx int, step string, {ts_col} {ts_t}"
+    schema = _out_schema(
+        up.df, up.key_col, ("step_idx", IntegerType()), ("step", StringType()), ts_col
+    )
     return stateful_batch(step_id, up, _Funnel, schema=schema)
 
 
@@ -819,20 +808,17 @@ def zscore_anomaly_stream(
     ``min_n`` prior values exist (cold-start guard). ``order_by``
     sorts rows inside each micro-batch for a deterministic replay;
     cross-batch order is arrival order, as for every streaming
-    operator here. Emits ``(key, value, z)`` rows; batch mode emits
-    the same alerts at EOF."""
+    operator here. Emits ``(key, value, z)`` rows."""
     if threshold <= 0 or min_n < 2:
         raise ValueError(
             f"threshold must be > 0 and min_n >= 2, got {threshold}, {min_n}"
         )
-    emit_each = bool(up.df.isStreaming)
 
     class _Welford(StatefulBatchLogic):
         def __init__(self, snap):
             self.n, self.mean, self.m2 = snap if snap is not None else (0, 0.0, 0.0)
-            self.alerts: list[tuple] = []
 
-        def _score_and_fold(self, pdf):
+        def on_batch(self, pdf):
             out = []
             rows = pdf.sort_values(order_by) if order_by else pdf
             for v in rows[val_col]:
@@ -847,29 +833,13 @@ def zscore_anomaly_stream(
                 d = x - self.mean
                 self.mean += d / self.n
                 self.m2 += d * (x - self.mean)
-            return out
-
-        def on_batch(self, pdf):
-            out = self._score_and_fold(pdf)
-            if emit_each:
-                emit = (
-                    pd.DataFrame(out, columns=[val_col, "z"]) if out else None
-                )
-                return emit, self.RETAIN
-            self.alerts.extend(out)
-            return None, self.RETAIN
-
-        def on_eof(self):
-            if not self.alerts:
-                return None, self.DISCARD
-            return pd.DataFrame(self.alerts, columns=[val_col, "z"]), self.DISCARD
+            return (pd.DataFrame(out, columns=[val_col, "z"]) if out else None), self.RETAIN
 
         def snapshot(self):
             return (self.n, self.mean, self.m2)
 
     up = _require_keyed(step_id, up)
-    key_t = up.df.schema[up.key_col].dataType.simpleString()
-    schema = f"{up.key_col} {key_t}, {val_col} double, z double"
+    schema = _out_schema(up.df, up.key_col, (val_col, DoubleType()), ("z", DoubleType()))
     return stateful_batch(step_id, up, _Welford, schema=schema)
 
 
@@ -893,11 +863,15 @@ def dedup_ttl_stream(
     bounded by the distinct items per TTL horizon, never by stream
     length, and snapshot/restore rides the standard checkpoint path.
     Rows process in ``ts_col`` order (stable-sorted within each
-    batch, ties by item), so batch mode equals the streamed result
-    over the same rows — order-deterministic, not arrival-dependent.
+    batch, ties by item), so the result does not depend on arrival
+    order inside a batch. It equals batch mode over the same rows only
+    when no row of a micro-batch is older than the max ``ts_col`` of
+    the earlier batches. With a ``ttl`` of 1 h, a late X@09:00 after
+    a batch of X@08:30 and Y@10:00 is emitted, because that batch
+    pruned X behind 10:00 (batch mode suppresses it); a late X@09:30
+    after X@10:00 is suppressed (batch mode keeps it instead of
+    X@10:00).
     """
-    from datetime import timedelta
-
     if not isinstance(ttl, timedelta) or ttl <= timedelta(0):
         raise ValueError(f"ttl must be a positive timedelta, got {ttl!r}")
 
@@ -920,17 +894,11 @@ def dedup_ttl_stream(
                 self.last = {k: v for k, v in self.last.items() if v > floor}
             return (pdf.iloc[keep] if keep else None), self.RETAIN
 
-        def on_eof(self):
-            return None, self.DISCARD
-
         def snapshot(self):
             return self.last
 
     up = _require_keyed(step_id, up)
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in up.df.schema.fields
-    )
-    return stateful_batch(step_id, up, _TtlDedup, schema=schema)
+    return stateful_batch(step_id, up, _TtlDedup, schema=up.df.schema)
 
 
 def moments_stream(
@@ -952,10 +920,10 @@ def moments_stream(
     Quantization matches the batch side exactly: HALF-UP rounding of
     ``(clamp(v)-lo)/(hi-lo) * 2S`` (Spark's ``F.round``; Python's
     banker's ``round`` would disagree on .5 boundaries), ``S = 2 **
-    moments_scale_bits(k)``. Streaming mode emits the key's RUNNING
-    sketch each batch; batch mode emits once at EOF — equal to the
-    grouped batch build, which the tests assert. Power sums emit as
-    strings (the exact value survives any transport width)."""
+    moments_scale_bits(k)``. Emits the key's RUNNING sketch after each
+    batch; over all rows it equals the grouped batch build, which the
+    tests assert. Power sums emit as strings (the exact value survives
+    any transport width)."""
     import math
 
     from bytewax_spark.functions.sketches import moments_scale_bits
@@ -963,7 +931,6 @@ def moments_stream(
     if not hi > lo:
         raise ValueError(f"need hi > lo, got [{lo}, {hi}]")
     s_cap = 1 << moments_scale_bits(k)
-    emit_each = bool(up.df.isStreaming)
 
     class _Moments(StatefulBatchLogic):
         def __init__(self, snap):
@@ -977,7 +944,7 @@ def moments_stream(
             else:
                 self.n, self.smin, self.smax, self.ms = 0, None, None, [0] * k
 
-        def _fold(self, pdf):
+        def on_batch(self, pdf):
             for v in pdf[val_col]:
                 x = min(max(float(v), lo), hi)
                 s = int(math.floor((x - lo) / (hi - lo) * (2 * s_cap) + 0.5)) - s_cap
@@ -988,34 +955,21 @@ def moments_stream(
                 for i in range(k):
                     p *= s
                     self.ms[i] += p
-
-        def _row(self):
             return pd.DataFrame(
-                [
-                    (self.n, self.smin, self.smax)
-                    + tuple(str(m) for m in self.ms)
-                ],
+                [(self.n, self.smin, self.smax) + tuple(str(m) for m in self.ms)],
                 columns=["n", "smin", "smax"] + [f"m{i+1}" for i in range(k)],
-            )
-
-        def on_batch(self, pdf):
-            self._fold(pdf)
-            if emit_each:
-                return self._row(), self.RETAIN
-            return None, self.RETAIN
-
-        def on_eof(self):
-            if self.n == 0:
-                return None, self.DISCARD
-            return self._row(), self.DISCARD
+            ), self.RETAIN
 
         def snapshot(self):
             return (self.n, self.smin, self.smax, [str(m) for m in self.ms])
 
     up = _require_keyed(step_id, up)
-    key_t = up.df.schema[up.key_col].dataType.simpleString()
-    mcols = ", ".join(f"m{i+1} string" for i in range(k))
-    schema = f"{up.key_col} {key_t}, n long, smin long, smax long, {mcols}"
+    schema = _out_schema(
+        up.df,
+        up.key_col,
+        *[(c, LongType()) for c in ("n", "smin", "smax")],
+        *[(f"m{i+1}", StringType()) for i in range(k)],
+    )
     return stateful_batch(step_id, up, _Moments, schema=schema)
 
 
@@ -1036,9 +990,9 @@ def sample_stream(
 
     Hashing matches ``functions.text.hash64`` (md5-derived), so batch
     mode equals ``functions.sampling.sample_exact_n`` run per key —
-    SQL-oracle exact. Streaming emits the key's CURRENT sample each
-    micro-batch; batch mode emits once at EOF, one row per kept item
-    ``(key, item, rk)`` with ``rk`` the 1-based hash rank."""
+    SQL-oracle exact. Emits the key's CURRENT sample after each
+    micro-batch, one row per kept item ``(key, item, rk)`` with ``rk``
+    the 1-based hash rank."""
     import hashlib
 
     if n < 1:
@@ -1048,14 +1002,12 @@ def sample_stream(
         d = hashlib.md5((salt + str(item)).encode()).hexdigest()
         return int(d[:15], 16)
 
-    emit_each = bool(up.df.isStreaming)
-
     class _Sample(StatefulBatchLogic):
         def __init__(self, snap):
             # state: list of (hash, item) sorted ascending, <= n long
             self.kept = [tuple(x) for x in snap] if snap else []
 
-        def _fold(self, pdf):
+        def on_batch(self, pdf):
             changed = False
             for it in pdf[item_col]:
                 pair = (_h(it), it)
@@ -1065,31 +1017,16 @@ def sample_stream(
                 changed = True
             if changed:
                 self.kept = sorted(set(self.kept))[:n]
-
-        def _rows(self):
             return pd.DataFrame(
                 [(it, i + 1) for i, (_, it) in enumerate(self.kept)],
                 columns=[item_col, "rk"],
-            )
-
-        def on_batch(self, pdf):
-            self._fold(pdf)
-            if emit_each:
-                return self._rows(), self.RETAIN
-            return None, self.RETAIN
-
-        def on_eof(self):
-            if not self.kept:
-                return None, self.DISCARD
-            return self._rows(), self.DISCARD
+            ), self.RETAIN
 
         def snapshot(self):
             return [list(p) for p in self.kept]
 
     up = _require_keyed(step_id, up)
-    key_t = up.df.schema[up.key_col].dataType.simpleString()
-    item_t = up.df.schema[item_col].dataType.simpleString()
-    schema = f"{up.key_col} {key_t}, {item_col} {item_t}, rk int"
+    schema = _out_schema(up.df, up.key_col, item_col, ("rk", IntegerType()))
     return stateful_batch(step_id, up, _Sample, schema=schema)
 
 
@@ -1109,23 +1046,16 @@ def ewma_stream(
     (``functions.timeseries.ewma``), so streamed == batch == replay
     bit-for-bit. Rows process in ``(ts, tiebreak)`` order within each
     batch (order-deterministic, not arrival-dependent — the
-    dedup_ttl_stream convention). Streaming mode emits the key's
-    RUNNING level each batch; batch mode emits once at EOF. Emits
-    ``(key, n, ewma_micro)``."""
+    dedup_ttl_stream convention). Emits the key's RUNNING level after
+    each batch: ``(key, n, ewma_micro)``."""
     if not (0 < num < den):
         raise ValueError(f"need 0 < num < den, got {num}/{den}")
-    emit_each = bool(up.df.isStreaming)
-
-    def _tdiv(a: int, b: int) -> int:
-        # truncate toward zero, matching SQL div / DuckDB //
-        q = abs(a) // b
-        return q if a >= 0 else -q
 
     class _Ewma(StatefulBatchLogic):
         def __init__(self, snap):
             self.n, self.e = snap if snap is not None else (0, None)
 
-        def _fold(self, pdf):
+        def on_batch(self, pdf):
             pdf = pdf.sort_values([ts_col, tiebreak_col], kind="mergesort")
             for v in pdf[val_col]:
                 x = int(v)
@@ -1134,29 +1064,13 @@ def ewma_stream(
                 else:
                     self.e = _tdiv(num * x + (den - num) * self.e, den)
                 self.n += 1
-
-        def _row(self):
-            return pd.DataFrame(
-                [(self.n, self.e)], columns=["n", "ewma_micro"]
-            )
-
-        def on_batch(self, pdf):
-            self._fold(pdf)
-            if emit_each:
-                return self._row(), self.RETAIN
-            return None, self.RETAIN
-
-        def on_eof(self):
-            if self.n == 0:
-                return None, self.DISCARD
-            return self._row(), self.DISCARD
+            return pd.DataFrame([(self.n, self.e)], columns=["n", "ewma_micro"]), self.RETAIN
 
         def snapshot(self):
             return (self.n, self.e)
 
     up = _require_keyed(step_id, up)
-    key_t = up.df.schema[up.key_col].dataType.simpleString()
-    schema = f"{up.key_col} {key_t}, n long, ewma_micro long"
+    schema = _out_schema(up.df, up.key_col, ("n", LongType()), ("ewma_micro", LongType()))
     return stateful_batch(step_id, up, _Ewma, schema=schema)
 
 
@@ -1174,24 +1088,19 @@ def holt_stream(
     integer recurrence as the batch twin
     (``functions.timeseries.holt_linear``), so streamed == batch ==
     replay bit-for-bit; rows process in ``(ts, tiebreak)`` order
-    within each batch. Streaming mode emits the running state each
-    batch; batch mode once at EOF. Emits ``(key, n, level_micro,
-    trend_micro)`` — one-step forecast = level + trend."""
+    within each batch. Emits the running state after each batch:
+    ``(key, n, level_micro, trend_micro)`` — one-step forecast =
+    level + trend."""
     an, ad = alpha
     bn, bd = beta
     if not (0 < an < ad and 0 < bn < bd):
         raise ValueError(f"need 0 < num < den for alpha/beta, got {alpha}, {beta}")
-    emit_each = bool(up.df.isStreaming)
-
-    def _tdiv(a: int, b: int) -> int:
-        q = abs(a) // b
-        return q if a >= 0 else -q
 
     class _Holt(StatefulBatchLogic):
         def __init__(self, snap):
             self.n, self.l, self.b = snap if snap is not None else (0, None, 0)
 
-        def _fold(self, pdf):
+        def on_batch(self, pdf):
             pdf = pdf.sort_values([ts_col, tiebreak_col], kind="mergesort")
             for v in pdf[val_col]:
                 x = int(v)
@@ -1202,30 +1111,17 @@ def holt_stream(
                     self.b = _tdiv(bn * (nl - self.l) + (bd - bn) * self.b, bd)
                     self.l = nl
                 self.n += 1
-
-        def _row(self):
             return pd.DataFrame(
-                [(self.n, self.l, self.b)],
-                columns=["n", "level_micro", "trend_micro"],
-            )
-
-        def on_batch(self, pdf):
-            self._fold(pdf)
-            if emit_each:
-                return self._row(), self.RETAIN
-            return None, self.RETAIN
-
-        def on_eof(self):
-            if self.n == 0:
-                return None, self.DISCARD
-            return self._row(), self.DISCARD
+                [(self.n, self.l, self.b)], columns=["n", "level_micro", "trend_micro"]
+            ), self.RETAIN
 
         def snapshot(self):
             return (self.n, self.l, self.b)
 
     up = _require_keyed(step_id, up)
-    key_t = up.df.schema[up.key_col].dataType.simpleString()
-    schema = f"{up.key_col} {key_t}, n long, level_micro long, trend_micro long"
+    schema = _out_schema(
+        up.df, up.key_col, *[(c, LongType()) for c in ("n", "level_micro", "trend_micro")]
+    )
     return stateful_batch(step_id, up, _Holt, schema=schema)
 
 
@@ -1243,14 +1139,13 @@ def cusum_stream(
     form, unlike the batch locator in ``functions.timeseries.
     cusum_changepoint`` which needs the global mean): state is one
     int64, ``S = max(0, S + (x − target − drift))`` on micro inputs,
-    alarming when ``S > threshold``. Emits one row per key per batch
-    (streaming) or at EOF (batch): ``(key, n, s_micro, alarms,
-    first_alarm_ts)`` — alarms counts threshold crossings evaluated
-    AFTER each fold step; the S statistic resets to 0 is NOT applied
-    on alarm (the monitoring convention where the operator reports and
-    the caller decides). Rows process in ``(ts, tiebreak)`` order, so
-    streamed == batch == a recursive-CTE replay, exactly."""
-    emit_each = bool(up.df.isStreaming)
+    alarming when ``S > threshold``. Emits one row per key after each
+    batch: ``(key, n, s_micro, alarms, first_alarm_ts)`` — alarms
+    counts threshold crossings evaluated AFTER each fold step; the S
+    statistic resets to 0 is NOT applied on alarm (the monitoring
+    convention where the operator reports and the caller decides).
+    Rows process in ``(ts, tiebreak)`` order, so streamed == batch ==
+    a recursive-CTE replay, exactly."""
 
     class _Cusum(StatefulBatchLogic):
         def __init__(self, snap):
@@ -1259,7 +1154,7 @@ def cusum_stream(
             else:
                 self.n, self.s, self.alarms, self.first_ts = 0, 0, 0, None
 
-        def _fold(self, pdf):
+        def on_batch(self, pdf):
             pdf = pdf.sort_values([ts_col, tiebreak_col], kind="mergesort")
             for v, t in zip(pdf[val_col], pdf[ts_col]):
                 self.s = max(0, self.s + int(v) - target_micro - drift_micro)
@@ -1268,32 +1163,19 @@ def cusum_stream(
                     self.alarms += 1
                     if self.first_ts is None:
                         self.first_ts = t
-            return None
-
-        def _row(self):
             return pd.DataFrame(
                 [(self.n, self.s, self.alarms, self.first_ts)],
                 columns=["n", "s_micro", "alarms", "first_alarm_ts"],
-            )
-
-        def on_batch(self, pdf):
-            self._fold(pdf)
-            if emit_each:
-                return self._row(), self.RETAIN
-            return None, self.RETAIN
-
-        def on_eof(self):
-            if self.n == 0:
-                return None, self.DISCARD
-            return self._row(), self.DISCARD
+            ), self.RETAIN
 
         def snapshot(self):
             return (self.n, self.s, self.alarms, self.first_ts)
 
     up = _require_keyed(step_id, up)
-    key_t = up.df.schema[up.key_col].dataType.simpleString()
-    schema = (
-        f"{up.key_col} {key_t}, n long, s_micro long, alarms long, "
-        "first_alarm_ts timestamp"
+    schema = _out_schema(
+        up.df,
+        up.key_col,
+        *[(c, LongType()) for c in ("n", "s_micro", "alarms")],
+        ("first_alarm_ts", TimestampType()),
     )
     return stateful_batch(step_id, up, _Cusum, schema=schema)

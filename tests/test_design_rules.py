@@ -76,3 +76,24 @@ def test_one_materialization_policy():
                 offenders.append(f"{rel}:{node.lineno} module-level container")
     assert checked > 20
     assert offenders == []
+
+
+def test_stream_logic_is_mode_blind():
+    """A batch run of a stateful stream function is a stream of one
+    micro-batch per key, so its logic never asks which mode it runs in:
+    ``isStreaming`` is read in ``streaming/__init__.py`` only by the
+    driver ``_stateful_batch_df`` and by input checks (the test of an
+    ``if`` whose body is a single ``raise``)."""
+    import bytewax_spark.streaming as streaming
+
+    path = pathlib.Path(streaming.__file__)
+    tree = ast.parse(path.read_text(), str(path))
+    allowed: set[int] = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.FunctionDef) and node.name == "_stateful_batch_df":
+            allowed.update(map(id, ast.walk(node)))
+        elif isinstance(node, ast.If) and len(node.body) == 1 and isinstance(node.body[0], ast.Raise):
+            allowed.update(map(id, ast.walk(node.test)))
+    reads = [n for n in ast.walk(tree) if isinstance(n, ast.Attribute) and n.attr == "isStreaming"]
+    assert reads, "the driver reads isStreaming"
+    assert [f"{path.name}:{n.lineno}" for n in reads if id(n) not in allowed] == []

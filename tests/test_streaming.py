@@ -1449,3 +1449,80 @@ def test_cusum_stream_on_target_never_alarms(spark):
     ).df.collect()[0]
     assert out["alarms"] == 0 and out["s_micro"] == 0
     assert out["first_alarm_ts"] is None
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "frequency_cap_stream",
+        "dedup_ttl_stream",
+        "heavy_hitters_stream",
+        "sample_stream",
+        "stateful_map_stream",
+    ],
+)
+def test_stream_functions_take_quoted_column_names(spark, name):
+    """Output schemas are built from the input's fields, so a column
+    whose name needs quoting in DDL (``item id``) passes through.
+    ``stateful_map_stream`` runs as a streaming drain, the others in
+    batch mode."""
+    import hashlib
+
+    import bytewax_spark.streaming as st
+
+    def count(state, _):
+        state = (state or 0) + 1
+        return state, state
+
+    t0 = datetime(2024, 1, 1)
+    rows = [("p", "a", t0, 0), ("p", "b", t0, 1), ("p", "a", t0, 2), ("q", "c", t0, 3)]
+    first = {("p", "a"), ("p", "b"), ("q", "c")}
+    lowest = min("ab", key=lambda x: hashlib.md5(x.encode()).hexdigest()[:15])
+    build, want = {
+        "frequency_cap_stream": (
+            lambda ks: st.frequency_cap_stream("f", ks, "item id", cap=1, order_by="seq"),
+            first,
+        ),
+        "dedup_ttl_stream": (
+            lambda ks: st.dedup_ttl_stream("f", ks, "item id", "ts", timedelta(hours=1)),
+            first,
+        ),
+        "heavy_hitters_stream": (
+            lambda ks: st.heavy_hitters_stream("f", ks, "item id", k=1),
+            {("p", "a"), ("q", "c")},
+        ),
+        "sample_stream": (
+            lambda ks: st.sample_stream("f", ks, "item id", n=1),
+            {("p", lowest), ("q", "c")},
+        ),
+        "stateful_map_stream": (
+            lambda ks: st.stateful_map_stream("f", ks, count, "item id", "n", "long", order_by="seq"),
+            {("p", "a", 1), ("p", "b", 2), ("p", "a", 3), ("q", "c", 1)},
+        ),
+    }[name]
+    streaming = name == "stateful_map_stream"
+    flow = Dataflow(f"quoted_{name}")
+    src = TestingSource(
+        rows, schema="part string, `item id` string, ts timestamp, seq long", streaming=streaming
+    )
+    out = build(op.key_on("key", op.input("in", flow, src), "part"))
+    assert "item id" in out.df.columns
+    if streaming:
+        op.output("out", out, MemorySink("quoted_out"))
+        got = {(r["key"], r["item id"], r["n"]) for r in drain(spark, flow, "quoted_out")}
+    else:
+        got = {(r["key"], r["item id"]) for r in out.df.collect()}
+    assert got == want
+
+
+@pytest.mark.parametrize("timeout", [timedelta(0), timedelta(microseconds=500)])
+def test_collect_stream_rejects_sub_millisecond_timeout(spark, timeout):
+    """The processing-time timer counts whole milliseconds: a shorter
+    timeout is refused when the flow is built, not by the state store
+    in the middle of a drain."""
+    from bytewax_spark.streaming import collect_stream
+
+    flow = Dataflow("coll_t")
+    s = op.input("in", flow, TestingSource([("a", 0)], schema="k string, v long"))
+    with pytest.raises(ValueError, match="timeout"):
+        collect_stream("c", op.key_on("key", s, "k"), "v", timeout=timeout, max_size=2)
