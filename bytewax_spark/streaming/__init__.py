@@ -578,18 +578,21 @@ def interval_join_stream(
     flow = left.flow
     fq = flow.register(step_id, "interval_join_stream", (left.step_id, right.step_id))
 
-    wm = f"{int(watermark.total_seconds())} seconds"
-    lw = left.df.withWatermark(left_ts, wm)
-    rw = right.df.withWatermark(right_ts, wm).withColumnRenamed(key, "_rk")
+    from bytewax_spark.operators.windowing import _interval, _us
+
+    wm = _interval(watermark)
+    # withWatermark parses its column argument as an identifier
+    lw = left.df.withWatermark("`" + left_ts.replace("`", "``") + "`", wm)
+    rw = right.df.withWatermark("`" + right_ts.replace("`", "``") + "`", wm).withColumnRenamed(key, "_rk")
     # raw event-time comparisons with INTERVAL literals: the streaming
     # planner derives its state-eviction bounds by analyzing exactly
     # this shape (wrapping the columns in conversions would defeat it)
-    lo = f"INTERVAL {int(lower.total_seconds() * 1_000_000)} MICROSECOND"
-    hi = f"INTERVAL {int(upper.total_seconds() * 1_000_000)} MICROSECOND"
+    lo = F.expr(f"INTERVAL {_us(lower)} MICROSECOND")
+    hi = F.expr(f"INTERVAL {_us(upper)} MICROSECOND")
     cond = (
         (F.col(key) == F.col("_rk"))
-        & (F.col(right_ts) >= F.expr(f"{left_ts} + {lo}"))
-        & (F.col(right_ts) <= F.expr(f"{left_ts} + {hi}"))
+        & (F.col(right_ts) >= F.col(left_ts) + lo)
+        & (F.col(right_ts) <= F.col(left_ts) + hi)
     )
     out = lw.join(rw, cond).drop("_rk")
     return KeyedStream(flow, fq, out, key)

@@ -688,6 +688,55 @@ def test_interval_join_stream_watermarked(spark):
     assert got == [(1, "b25", "c0"), (1, "b25", "c20")]
 
 
+def _click_buy_streams(flow, click_ts: str, buy_ts: str):
+    ts = lambda m: datetime(2024, 1, 1, 0, m)  # noqa: E731
+    clicks = TestingSource(
+        [(1, ts(0), "c0"), (1, ts(20), "c20"), (2, ts(5), "c5")],
+        schema=f"cuid long, `{click_ts}` timestamp, click string",
+        streaming=True,
+    )
+    buys = TestingSource(
+        [(1, ts(25), "b25"), (2, ts(50), "b50")],
+        schema=f"buid long, `{buy_ts}` timestamp, buy string",
+        streaming=True,
+    )
+    return (
+        op.key_on("kc", op.input("clicks", flow, clicks), "cuid"),
+        op.key_on("kb", op.input("buys", flow, buys), "buid"),
+    )
+
+
+def test_interval_join_stream_ts_names_need_quoting(spark):
+    """Event-time columns whose names are not bare SQL identifiers join
+    like any other."""
+    from bytewax_spark.streaming import interval_join_stream
+
+    flow = Dataflow("s_ij_quoted")
+    clicks, buys = _click_buy_streams(flow, "click ts", "buy ts")
+    joined = interval_join_stream(
+        "ij", buys, clicks, left_ts="buy ts", right_ts="click ts",
+        lower=timedelta(minutes=-30), upper=timedelta(0), watermark=timedelta(minutes=10),
+    )
+    op.output("out", joined, MemorySink("s_ij_quoted_out"))
+    rows = drain(spark, flow, "s_ij_quoted_out")
+    assert sorted((r["key"], r["buy"], r["click"]) for r in rows) == [(1, "b25", "c0"), (1, "b25", "c20")]
+
+
+def test_interval_join_stream_subsecond_watermark(spark):
+    """A 1.5 s watermark stays 1.5 s on both sides (was truncated to 1 s)."""
+    from bytewax_spark.streaming import interval_join_stream
+
+    flow = Dataflow("s_ij_wm")
+    clicks, buys = _click_buy_streams(flow, "cts", "bts")
+    joined = interval_join_stream(
+        "ij", buys, clicks, left_ts="bts", right_ts="cts",
+        lower=timedelta(minutes=-30), upper=timedelta(0), watermark=timedelta(seconds=1.5),
+    )
+    schema = joined.df.schema
+    assert schema["bts"].metadata["spark.watermarkDelayMs"] == 1500
+    assert schema["cts"].metadata["spark.watermarkDelayMs"] == 1500
+
+
 def test_interval_join_stream_validates(spark):
     from bytewax_spark.streaming import interval_join_stream
 
