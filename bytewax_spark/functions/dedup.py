@@ -29,7 +29,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from bytewax_spark.functions._materialize import materialize
+from bytewax_spark.functions.sketches import _digest_positions
 from bytewax_spark.functions.text import hash64, tokenize, word_shingles
+from bytewax_spark.io import _shuffle_partitions
 
 __all__ = [
     "hamming_neighbor_pairs",
@@ -159,21 +161,6 @@ def dedup_incremental(
 _POW2 = [1 << i for i in range(63)] + [-(1 << 63)]
 
 
-def _bloom_positions(key: Column, m_bits: int, n_hashes: int) -> list[Column]:
-    """``n_hashes`` bit positions from as few md5 evaluations as
-    possible: each 128-bit digest yields four independent 32-bit
-    chunks (digest splitting — the standard cheap Bloom hash family),
-    so 4 hashes cost ONE md5 per row instead of four."""
-    out: list[Column] = []
-    for d in range((n_hashes + 3) // 4):
-        salt = F.lit(f"bf{d}:") if d else F.lit("")
-        digest = F.md5(F.concat(salt, key.cast("string")))
-        for c in range(min(4, n_hashes - 4 * d)):
-            chunk = F.conv(F.substring(digest, 1 + 8 * c, 8), 16, 10).cast("bigint")
-            out.append(F.pmod(chunk, F.lit(m_bits)))
-    return out
-
-
 def bloom_build(
     df: DataFrame, key: Column | str, m_bits: int, n_hashes: int = 4
 ) -> list[int]:
@@ -189,7 +176,7 @@ def bloom_build(
     confirm step, never wrong answers."""
     assert m_bits % 64 == 0, "m_bits must be a multiple of 64"
     key = F.col(key) if isinstance(key, str) else key
-    pos = F.array(_bloom_positions(key, m_bits, n_hashes))
+    pos = F.array(_digest_positions(key, m_bits, n_hashes, "bf"))
     pow2 = F.lit(_POW2)
     rows = (
         df.select(F.explode(pos).alias("_p"))
@@ -218,7 +205,7 @@ def bloom_might_contain(
     arr = F.lit(words)
     pow2 = F.lit(_POW2)
     cond = None
-    for p in _bloom_positions(key, m_bits, n_hashes):
+    for p in _digest_positions(key, m_bits, n_hashes, "bf"):
         word = F.element_at(arr, (p / 64).cast("int") + 1)
         mask = F.element_at(pow2, F.pmod(p, F.lit(64)).cast("int") + 1)
         hit = word.bitwiseAND(mask) != 0
@@ -511,26 +498,9 @@ def minhash_lsh_pairs(
     left are the signature aggregation, the tiny class agg, and the
     class-level join. Value-identical to the doc-level self-join (same
     candidate set; oracle hash-exact), measured 385 s → ~8 s at sf1."""
-    shuffle_parts = int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-    )
-    rows_per_band = k // bands
+    shuffle_parts = _shuffle_partitions(df)
     wide = _minhash_wide(df, text_col, id_col, n, k, shingler=shingler)
-    bucket_cols = [
-        F.md5(
-            F.concat_ws(
-                ",",
-                *[
-                    F.col(f"_mh{i}").cast("string")
-                    for i in range(
-                        j * rows_per_band + 1, (j + 1) * rows_per_band + 1
-                    )
-                ],
-            )
-        ).alias(f"_b{j}")
-        for j in range(bands)
-    ]
-    sig = wide.select(F.col(id_col), F.array(*bucket_cols).alias("_sig"))
+    sig = wide.select(F.col(id_col), _band_buckets(k, bands).alias("_sig"))
     cls = (
         sig.groupBy("_sig")
         .agg(F.sort_array(F.collect_list(F.col(id_col))).alias("_ids"))
@@ -683,34 +653,22 @@ def _banded(
     shingler=None,
 ) -> DataFrame:
     """(id[, extra...], band, bucket) LSH rows — the shared banding step."""
-    rows_per_band = k // bands
     wide = _minhash_wide(df, text_col, id_col, n, k, extra_cols, shingler=shingler)
-    band_structs = F.array(
-        [
-            F.struct(
-                F.lit(j).cast("int").alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.col(f"_mh{i}").cast("string")
-                            for i in range(
-                                j * rows_per_band + 1, (j + 1) * rows_per_band + 1
-                            )
-                        ],
-                    )
-                ).alias("bucket"),
-            )
-            for j in range(bands)
-        ]
-    )
     return wide.select(
-        F.col(id_col), *extra_cols, F.explode(band_structs).alias("_bb")
-    ).select(
-        id_col,
+        F.col(id_col),
         *extra_cols,
-        F.col("_bb.band").alias("band"),
-        F.col("_bb.bucket").alias("bucket"),
+        F.posexplode(_band_buckets(k, bands)).alias("band", "bucket"),
+    )
+
+
+def _band_buckets(k: int, bands: int) -> Column:
+    """The array of a ``_minhash_wide`` row's band bucket keys: band
+    ``j`` is the md5 of its ``k // bands`` minima (``_mh{i}``, in
+    i-order) joined with commas."""
+    r = k // bands
+    minima = [F.col(f"_mh{i}").cast("string") for i in range(1, bands * r + 1)]
+    return F.array(
+        *[F.md5(F.concat_ws(",", *minima[j * r : (j + 1) * r])) for j in range(bands)]
     )
 
 
@@ -865,12 +823,6 @@ def _spread(df: DataFrame) -> DataFrame:
     return ensure_min_partitions(df)
 
 
-def _pair_parallelism(df: DataFrame) -> int:
-    """The session's shuffle-partition count — the explicit partition
-    count that pins comparator-join fan-out against AQE coalescing."""
-    return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
-
-
 def embedding_cosine_pairs(
     df: DataFrame,
     vec_col: str,
@@ -882,28 +834,19 @@ def embedding_cosine_pairs(
 
     Blocked: cosine is only computed inside ``block_col`` groups
     (label, IVF cell, LSH bucket) — the 100 TB pattern where the
-    all-pairs join is impossible. Rows with a NULL block key are
-    dropped before grouping (they belong to no block). A row whose
+    all-pairs join is impossible. Rows with a NULL block key or a NULL
+    id are dropped before grouping (they belong to no block; a NULL id
+    is in no ``id_a < id_b`` pair). A row whose
     vector is NULL or has zero norm has no cosine: it is dropped
     before scoring.
 
     One ``applyInPandas`` kernel per block: the block's vectors arrive
-    once, sorted by id so the upper triangle of the cosine matrix
-    enumerates exactly the ``id_a < id_b`` pairs. The cosine is
-    ``(V·Vᵀ) / outer(norms)`` in float64, rounded HALF-UP to 6 dp
-    (``similarity.round6_half_up`` — the rule Spark ``F.round`` and
-    DuckDB ``ROUND`` share) BEFORE the ``>= threshold`` test, so
-    boundary pairs match a SQL oracle; only surviving
-    (id_a, id_b, cosine) rows return. A numpy kernel rather than a
-    block self-join because Spark's higher-order array functions
-    evaluate interpreted (~17 µs per 64-dim cosine, ~7× more per
-    pair).
-
-    Skew guard: the matrix is computed in ROW BLOCKS sized <= ~64 MB
-    of float64 so a degenerate block (mass-duplicate vectors) costs
-    quadratic TIME but never materializes a quadratic dense matrix in
-    one task. Block [s:e) emits exactly the pairs whose
-    smaller-sorted-index row lands in it.
+    once and ``similarity._pairs_above`` scores them with
+    ``similarity._cosine_blocks`` (numpy, rounded HALF-UP to 6 dp BEFORE
+    the ``>= threshold`` test, row blocks <= 64 MB), so boundary pairs
+    match a SQL oracle; pairs are kept by ``id_a < id_b`` on the ids
+    themselves, so a duplicated id pairs with nothing of its own id.
+    Only surviving (id_a, id_b, cosine) rows return.
 
     Parallelism is PINNED, not left to the optimizer: the input is
     explicitly repartitioned to ``spark.sql.shuffle.partitions`` on the
@@ -915,13 +858,10 @@ def embedding_cosine_pairs(
     under contention; same trap fixed in ``linkage.fuzzy_self_pairs``).
     The explicit-count HashPartitioning satisfies applyInPandas'
     clustering requirement, so no second exchange is added."""
-    import numpy as np
-    import pandas as pd
-
     from bytewax_spark.functions.similarity import (
         _KERNEL_BLOCK_BYTES,
+        _pairs_above,
         _scorable_rows,
-        round6_half_up,
     )
 
     id_dt = df.schema[id_col].dataType.simpleString()
@@ -929,54 +869,17 @@ def embedding_cosine_pairs(
     block_bytes = _KERNEL_BLOCK_BYTES  # bind by value: ships to executors
 
     def kernel(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        pdf, v, norms = _scorable_rows(pdf.sort_values(id_col, kind="stable"))
-        n = len(pdf)
-        if n < 2:
-            return _empty_pairs()
+        pdf, v, norms = _scorable_rows(pdf)
         ids = pdf[id_col].to_numpy()
-        blk = max(1, min(n, block_bytes // (n * 8)))
-        out_a, out_b, out_c = [], [], []
-        for s in range(0, n, blk):
-            e = min(s + blk, n)
-            cblk = round6_half_up(
-                (v[s:e] @ v.T) / np.outer(norms[s:e], norms)
-            )
-            # strict upper triangle of the FULL matrix restricted to
-            # rows [s, e): columns j > global row index i
-            ia, ib = np.nonzero(
-                (cblk >= threshold)
-                & (np.arange(n)[None, :] > (s + np.arange(e - s))[:, None])
-            )
-            out_a.append(ids[ia + s])
-            out_b.append(ids[ib])
-            out_c.append(cblk[ia, ib])
-        return pd.DataFrame(
-            {
-                "id_a": np.concatenate(out_a),
-                "id_b": np.concatenate(out_b),
-                "cosine": np.concatenate(out_c),
-            }
-        )
+        return _pairs_above(ids, v, norms, ids, v, norms, threshold, block_bytes)
 
-    src = df.filter(F.col(block_col).isNotNull()).select(
+    src = df.filter(F.col(block_col).isNotNull() & F.col(id_col).isNotNull()).select(
         F.col(id_col),
         F.col(block_col).alias("_blk"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
     )
-    src = src.repartition(_pair_parallelism(df), "_blk")
+    src = src.repartition(_shuffle_partitions(df), "_blk")
     return src.groupBy("_blk").applyInPandas(kernel, schema)
-
-
-def _empty_pairs() -> "pd.DataFrame":
-    import pandas as pd
-
-    return pd.DataFrame(
-        {
-            "id_a": pd.Series(dtype="object"),
-            "id_b": pd.Series(dtype="object"),
-            "cosine": pd.Series(dtype="float64"),
-        }
-    )
 
 
 def lsh_cosine_pairs(
@@ -1027,20 +930,17 @@ def lsh_cosine_pairs(
     joining vectors back per candidate is strictly worse (the
     candidate stream is (p+1)·bucket_size·N/2 pairs, and re-attaching
     vectors shuffles it twice; measured 6.9 s → 8.3 s at sf0.1). The
-    per-bucket kernel computes the probe×home cosine matrix in
-    <=64 MB row blocks (the same skew guard), masks
-    ``id_probe < id_home``, rounds HALF-UP to 6 dp, then thresholds."""
-    import numpy as np
-    import pandas as pd
-
+    per-bucket kernel is ``similarity._pairs_above`` on the probe rows
+    against the home rows: the same cosine blocks and pair rule as
+    :func:`embedding_cosine_pairs`."""
     from bytewax_spark.functions.similarity import (
         _KERNEL_BLOCK_BYTES,
+        _pairs_above,
         _scorable_rows,
         adaptive_n_planes,
         as_double,
         lsh_bucket_col,
         lsh_probe_buckets,
-        round6_half_up,
     )
 
     if n_planes is None:
@@ -1058,36 +958,12 @@ def lsh_cosine_pairs(
 
     def kernel(pdf: "pd.DataFrame") -> "pd.DataFrame":
         pdf, v, norms = _scorable_rows(pdf)
-        is_probe = (pdf["_h"] == 0).to_numpy()
-        ids = pdf[id_col].to_numpy()
-        pid, hid = ids[is_probe], ids[~is_probe]
-        pv, pn = v[is_probe], norms[is_probe]
-        hv, hn = v[~is_probe], norms[~is_probe]
-        np_, nh = len(pid), len(hid)
-        if np_ == 0 or nh == 0:
-            return _empty_pairs()
-        blk = max(1, min(np_, block_bytes // (nh * 8)))
-        out_a, out_b, out_c = [], [], []
-        for s in range(0, np_, blk):
-            e = min(s + blk, np_)
-            cblk = round6_half_up(
-                (pv[s:e] @ hv.T) / np.outer(pn[s:e], hn)
-            )
-            ia, ib = np.nonzero(
-                (cblk >= threshold) & (pid[s:e, None] < hid[None, :])
-            )
-            out_a.append(pid[ia + s])
-            out_b.append(hid[ib])
-            out_c.append(cblk[ia, ib])
-        return pd.DataFrame(
-            {
-                "id_a": np.concatenate(out_a),
-                "id_b": np.concatenate(out_b),
-                "cosine": np.concatenate(out_c),
-            }
+        ids, h = pdf[id_col].to_numpy(), (pdf["_h"] == 1).to_numpy()
+        return _pairs_above(
+            ids[~h], v[~h], norms[~h], ids[h], v[h], norms[h], threshold, block_bytes
         )
 
-    base = df.select(
+    base = df.filter(F.col(id_col).isNotNull()).select(
         F.col(id_col), bucket.alias("_b"), as_double(vec_col).alias("_v")
     )
     probes = base.select(
@@ -1101,7 +977,7 @@ def lsh_cosine_pairs(
     homes = base.select(
         id_col, "_v", F.col("_b").alias("_blk"), F.lit(1).alias("_h")
     )
-    u = probes.unionByName(homes).repartition(_pair_parallelism(df), "_blk")
+    u = probes.unionByName(homes).repartition(_shuffle_partitions(df), "_blk")
     return u.groupBy("_blk").applyInPandas(kernel, schema)
 
 

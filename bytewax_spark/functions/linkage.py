@@ -25,6 +25,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bytewax_spark.io import _shuffle_partitions
+
 __all__ = ["blocked_fuzzy_join", "fuzzy_self_pairs", "sorted_neighborhood_pairs"]
 
 
@@ -62,12 +64,9 @@ def blocked_fuzzy_join(
         raise ValueError(f"n_slices must be >= 1, got {n_slices}")
     lt, rt = text
     if n_slices > 1:
-        shuffle_parts = int(
-            left.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
         left = left.withColumn(
             "_slice_l", F.pmod(F.xxhash64(F.col(lt)), F.lit(n_slices))
-        ).repartition(shuffle_parts, "_slice_l", *[lc for lc, _ in block_on])
+        ).repartition(_shuffle_partitions(left), "_slice_l", *[lc for lc, _ in block_on])
         right = right.withColumn(
             "_slice_r", F.explode(F.sequence(F.lit(0), F.lit(n_slices - 1)))
         )
@@ -126,12 +125,9 @@ def fuzzy_self_pairs(
         # implicit repartition would be AQE-coalesced right back (the
         # row payload is tiny; the work is per-PAIR, which AQE cannot
         # see). The explicit count pins the fan-out.
-        shuffle_parts = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
         a_side = slim.withColumn(
             "_slice", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_slices))
-        ).repartition(shuffle_parts, "_slice", *block_cols)
+        ).repartition(_shuffle_partitions(df), "_slice", *block_cols)
         b_side = slim.withColumn(
             "_slice", F.explode(F.sequence(F.lit(0), F.lit(n_slices - 1)))
         )
@@ -204,9 +200,7 @@ def sorted_neighborhood_pairs(
     from pyspark.sql import Window
 
     slim = df.select(F.col(id_col), F.col(sort_col), F.col(text_col))
-    parts = int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-    )
+    parts = _shuffle_partitions(df)
     boundaries: list = []
     if parts > 1:
         # seeded sample -> driver-side evenly spaced cut points; tiny

@@ -24,7 +24,7 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..io import read_parquet
+from ..io import _shuffle_partitions, read_parquet
 
 __all__ = [
     "adaptive_n_planes",
@@ -175,13 +175,10 @@ def cosine_topk_batch(
     by contract — a query batch, not a corpus; a 512 MB guard raises
     with advice before an oversized pull) and ships to executors as a
     broadcast numpy matrix. The corpus is scanned with
-    ``mapInPandas``: each Arrow batch computes the dense probes x
-    batch cosine matrix (rounded to 6 dp BEFORE ranking) and emits
-    only its per-probe partial top-k — exact, because every global
-    top-k row is in its own batch's top-k. A numpy kernel rather than
-    a broadcast nested-loop expression plan because Spark's
-    higher-order array functions evaluate interpreted (~17 us per
-    64-dim cosine, ~7x the wall time for the same pairs). The partial
+    ``mapInPandas``: each Arrow batch scores probes x batch with
+    :func:`_cosine_blocks` (numpy, rounded, row blocks <= 64 MB) and
+    emits only its per-probe partial top-k — exact, because every
+    global top-k row is in its own batch's top-k. The partial
     rows are skinny (probe_id, id, cosine), and the global per-probe
     cut is ``topk.top_k_per_group`` — the two-phase skew-proof rank,
     so even with one probe no single task sorts every candidate.
@@ -242,33 +239,29 @@ def _scatter_topk(
         StructField("cosine", DoubleType()),
     ]
 
+    block_bytes = _KERNEL_BLOCK_BYTES  # bind by value: closure ships to executors
+
     def gen(batches):
         b_pids, b_pvals, b_pmat, b_pnorm = bc.value
         for pdf in batches:
             pdf, v, vnorm = _scorable_rows(pdf)
-            n = len(pdf)
-            if n == 0 or len(b_pids) == 0:
+            if len(pdf) == 0:
                 continue
             ids = pdf[id_col].to_numpy()
             cvals = [pdf[c].to_numpy() for c in c_extra]
-            cmat = round6_half_up(
-                (b_pmat @ v.T) / np.outer(b_pnorm, vnorm)
-            )
-            if exclude_same_id:
-                cmat[b_pids[:, None] == ids[None, :]] = -np.inf
-            kk = min(k, n)
             out = {f.name: [] for f in fields}
-            for qi in range(len(b_pids)):
-                row = cmat[qi]
-                sel = np.lexsort((ids, -row))[:kk]
-                sel = sel[row[sel] > -np.inf]
-                out["probe_id"].extend([b_pids[qi]] * len(sel))
-                out[id_col].extend(ids[sel].tolist())
-                out["cosine"].extend(row[sel].tolist())
-                for c, vals in zip(p_extra, b_pvals):
-                    out[c].extend([vals[qi]] * len(sel))
-                for c, vals in zip(c_extra, cvals):
-                    out[c].extend(vals[sel].tolist())
+            for s, blk in _cosine_blocks(b_pmat, b_pnorm, v, vnorm, block_bytes):
+                if exclude_same_id:
+                    blk[b_pids[s : s + len(blk), None] == ids[None, :]] = -np.inf
+                for qi, row in enumerate(blk, s):
+                    sel = _top_k(row, ids, k)
+                    out["probe_id"].extend([b_pids[qi]] * len(sel))
+                    out[id_col].extend(ids[sel].tolist())
+                    out["cosine"].extend(row[sel].tolist())
+                    for c, vals in zip(p_extra, b_pvals):
+                        out[c].extend([vals[qi]] * len(sel))
+                    for c, vals in zip(c_extra, cvals):
+                        out[c].extend(vals[sel].tolist())
             yield pd.DataFrame(out)
 
     src = df.select(F.col(id_col), as_double(vec_col).alias("_v"), *c_extra)
@@ -280,13 +273,62 @@ def _scatter_topk(
 
 _PROBE_PULL_CAP_BYTES = 512 * 1024 * 1024
 
-# max bytes of float64 a pair-stage kernel may materialize as ONE dense
-# cosine block: kernels chunk their matrix into row blocks of
-# <= this size so a degenerate bucket/block (mass-duplicate vectors all
-# hashing together) costs quadratic TIME but can never OOM a task with
-# a quadratic ALLOCATION. Module-level so tests can shrink it and drive
-# the multi-block path on small corpora.
+# the budget of one :func:`_cosine_blocks` block. Module-level so tests
+# can shrink it and drive the multi-block path on small corpora; a
+# kernel binds it by value before its closure ships to executors.
 _KERNEL_BLOCK_BYTES = 64 * 1024 * 1024
+
+
+def _cosine_blocks(qv, qn, cv, cn, block_bytes: int):
+    """Yield ``(start, block)``: the cosines of query rows
+    ``[start, start + len(block))`` against every candidate row, as
+    ``(qv @ cv.T) / outer(qn, cn)`` in float64 rounded with
+    :func:`round6_half_up`, so a threshold or a top-k tie sees the
+    value Spark ``F.round`` and DuckDB ``ROUND`` give. ``qn``/``cn``
+    are the row norms :func:`_scorable_rows` returns.
+
+    The one cosine kernel of the vector functions. A numpy kernel
+    rather than an expression plan because Spark's higher-order array
+    functions evaluate interpreted, outside whole-stage codegen (~17 µs
+    per 64-dim cosine, ~7× the wall time for the same pairs).
+
+    Skew guard: a block holds at most ``block_bytes`` of float64 (and
+    at least one query row), so a degenerate bucket (mass-duplicate
+    vectors hashing together) costs quadratic TIME but never a
+    quadratic allocation in one task. Each query row's cosines lie in
+    one block, so per-row pair and top-k rules are exact."""
+    import numpy as np
+
+    step = max(1, block_bytes // (max(len(cn), 1) * 8))
+    for s in range(0, len(qn), step):
+        yield s, round6_half_up((qv[s : s + step] @ cv.T) / np.outer(qn[s : s + step], cn))
+
+
+def _pairs_above(pid, pv, pn, hid, hv, hn, threshold: float, block_bytes: int):
+    """The ``(id_a, id_b, cosine)`` frame of the probe × home pairs
+    with ``pid < hid`` (compared by id, so a duplicated id pairs with
+    nothing of its own id) and rounded ``cosine >= threshold``."""
+    import numpy as np
+    import pandas as pd
+
+    out = []
+    for s, blk in _cosine_blocks(pv, pn, hv, hn, block_bytes):
+        ia, ib = np.nonzero((blk >= threshold) & (pid[s : s + len(blk), None] < hid[None, :]))
+        out.append((pid[ia + s], hid[ib], blk[ia, ib]))
+    if not out:  # no probe rows: object ids take any id type
+        out = [(np.empty(0, object), np.empty(0, object), np.empty(0))]
+    cols = [np.concatenate(c) for c in zip(*out)]
+    return pd.DataFrame(dict(zip(("id_a", "id_b", "cosine"), cols)))
+
+
+def _top_k(row, ids, k: int):
+    """Indices of the ``k`` best finite entries of ``row`` under
+    (cosine desc, id asc). A caller masks the entries it excludes to
+    ``-inf`` first."""
+    import numpy as np
+
+    sel = np.lexsort((ids, -row))[:k]
+    return sel[np.isfinite(row[sel])]
 
 
 def _scorable_rows(pdf: "pd.DataFrame"):
@@ -864,22 +906,13 @@ def knn_label_agreement_lsh(
 
     Scale shape: ONE shuffle on the bucket key (never a broadcast
     nested loop over the corpus) into one ``applyInPandas`` kernel per
-    bucket — the bucket's vectors arrive once, numpy computes the
-    cosine matrix (float64, rounded to 6 dp before ranking) and the
-    per-probe top-k cut by (rounded cosine desc, id asc) excluding
-    self, and only the 5-column verdict rows come back. An external
-    SQL oracle reproduces the selection exactly. A numpy kernel rather
-    than a bucket self-join because Spark's higher-order array
-    functions do not participate in whole-stage codegen — ~17 µs per
-    64-dim cosine interpreted, 7× the wall time for the same pairs.
-    Per-bucket cost is quadratic in bucket size — bounded by plane
-    count; size planes so buckets stay O(100-1000) rows.
-
-    Skew guard: the cosine matrix is computed in ROW BLOCKS of
-    <= ~64 MB of float64 — a degenerate bucket (e.g. mass-duplicate
-    vectors hashing together) costs O(n^2) TIME but never materializes
-    an O(n^2) dense matrix in a single task. Each probe's top-k needs
-    only its own row of cosines, so block results are exact."""
+    bucket — the bucket's vectors arrive once, :func:`_cosine_blocks`
+    scores them (numpy, rounded, row blocks <= 64 MB), each row's own
+    cosine is masked and the rest cut by (rounded cosine desc, id
+    asc), and only the 5-column verdict rows come back. An external
+    SQL oracle reproduces the selection exactly. Per-bucket cost is
+    quadratic in bucket size — bounded by plane count; size planes so
+    buckets stay O(100-1000) rows."""
     import numpy as np
     import pandas as pd
 
@@ -894,34 +927,21 @@ def knn_label_agreement_lsh(
 
     def kernel(pdf: "pd.DataFrame") -> "pd.DataFrame":
         pdf, v, norms = _scorable_rows(pdf)
-        n = len(pdf)
-        if n < 2:
+        if len(pdf) < 2:
             return pd.DataFrame({c: pd.Series(dtype="object") for c in cols})
         ids = pdf[id_col].to_numpy()
         labs = pdf[label_col].to_numpy()
         # SQL equality: a NULL label agrees with nothing (numpy's
         # object == counts None == None)
         known = pd.notna(labs)
-        blk = max(1, min(n, block_bytes // (n * 8)))
         rows = []
-        for s in range(0, n, blk):
-            e = min(s + blk, n)
-            cblk = round6_half_up(
-                (v[s:e] @ v.T) / np.outer(norms[s:e], norms)
-            )
-            for i in range(s, e):
-                c = cblk[i - s]
+        for s, blk in _cosine_blocks(v, norms, v, norms, block_bytes):
+            for i, c in enumerate(blk, s):
                 c[i] = -np.inf  # self excluded before the cut
-                if n - 1 <= k:
-                    sel = np.flatnonzero(c > -np.inf)
-                else:
-                    idx = np.lexsort((ids, -c))
-                    sel = idx[idx != i][:k]
+                sel = _top_k(c, ids, k)
                 nn = len(sel)
                 ns = int(((labs[sel] == labs[i]) & known[sel]).sum()) if known[i] else 0
-                rows.append(
-                    (ids[i], labs[i], nn, ns, ns * 1_000_000 // nn)
-                )
+                rows.append((ids[i], labs[i], nn, ns, ns * 1_000_000 // nn))
         return pd.DataFrame(rows, columns=cols)
 
     b = df.select(
@@ -935,8 +955,7 @@ def knn_label_agreement_lsh(
     # quadratic per bucket, so coalescing serializes the kernels); the
     # explicit-count HashPartitioning satisfies applyInPandas'
     # clustering requirement — no extra exchange.
-    parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
-    return b.repartition(parts, "_b").groupBy("_b").applyInPandas(kernel, schema)
+    return b.repartition(_shuffle_partitions(df), "_b").groupBy("_b").applyInPandas(kernel, schema)
 
 
 # binary-gain DCG weights, micro-quantized per rank (1-based):

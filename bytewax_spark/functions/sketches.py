@@ -59,18 +59,26 @@ __all__ = [
 ]
 
 
-def countmin_positions(key: Column, width: int, depth: int) -> list[Column]:
-    """``depth`` bucket positions for ``key`` — md5 digest splitting:
-    each 128-bit digest provides four independent 32-bit chunks, so 4
-    rows of the sketch cost ONE md5 evaluation per input row."""
+def _digest_positions(key: Column, width: int, n: int, salt: str) -> list[Column]:
+    """``n`` positions in ``[0, width)`` for ``key`` by md5 digest
+    splitting: each 128-bit digest provides four independent 32-bit
+    chunks, so 4 positions cost ONE md5 evaluation per row. Digest 0
+    hashes the bare key, digest ``d > 0`` the key salted with
+    ``f"{salt}{d}:"``."""
     out: list[Column] = []
-    for d in range((depth + 3) // 4):
-        salt = F.lit(f"cm{d}:") if d else F.lit("")
-        digest = F.md5(F.concat(salt, key.cast("string")))
-        for c in range(min(4, depth - 4 * d)):
+    for d in range((n + 3) // 4):
+        prefix = F.lit(f"{salt}{d}:") if d else F.lit("")
+        digest = F.md5(F.concat(prefix, key.cast("string")))
+        for c in range(min(4, n - 4 * d)):
             chunk = F.conv(F.substring(digest, 1 + 8 * c, 8), 16, 10).cast("bigint")
             out.append(F.pmod(chunk, F.lit(width)))
     return out
+
+
+def countmin_positions(key: Column, width: int, depth: int) -> list[Column]:
+    """``depth`` bucket positions for ``key`` (:func:`_digest_positions`
+    salted ``cm``): 4 rows of the sketch cost ONE md5 per input row."""
+    return _digest_positions(key, width, depth, "cm")
 
 
 def countmin_build(

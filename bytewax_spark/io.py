@@ -59,6 +59,13 @@ def ensure_min_partitions(df: DataFrame, n: int | None = None) -> DataFrame:
     return df
 
 
+def _shuffle_partitions(df: DataFrame) -> int:
+    """The session's ``spark.sql.shuffle.partitions``: the explicit
+    count a per-pair or per-row-heavy stage repartitions to, so AQE
+    cannot coalesce its small-in-bytes exchange into a few tasks."""
+    return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
+
+
 def write_bucketed(
     df: DataFrame,
     table: str,

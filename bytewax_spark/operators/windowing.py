@@ -76,6 +76,12 @@ def _interval(td: timedelta) -> str:
     return f"{_us(td)} microseconds"
 
 
+def _quoted(name: str) -> str:
+    """``name`` as a backtick-quoted identifier, for the APIs that parse
+    their column argument (``withWatermark``)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 # ---------------------------------------------------------------------------
 # clocks (reference windowing.py:78-425)
 # ---------------------------------------------------------------------------
@@ -463,7 +469,7 @@ def _windowed_agg(
     df = up.df
     ts = clock.ts_col()
     if df.isStreaming and isinstance(clock, EventClock) and clock.watermark_delay > timedelta(0):
-        df = df.withWatermark(clock.ts_field, _interval(clock.watermark_delay))
+        df = df.withWatermark(_quoted(clock.ts_field), _interval(clock.watermark_delay))
         ts = F.col(clock.ts_field)
 
     if fold is not None:

@@ -578,12 +578,11 @@ def interval_join_stream(
     flow = left.flow
     fq = flow.register(step_id, "interval_join_stream", (left.step_id, right.step_id))
 
-    from bytewax_spark.operators.windowing import _interval, _us
+    from bytewax_spark.operators.windowing import _interval, _quoted, _us
 
     wm = _interval(watermark)
-    # withWatermark parses its column argument as an identifier
-    lw = left.df.withWatermark("`" + left_ts.replace("`", "``") + "`", wm)
-    rw = right.df.withWatermark("`" + right_ts.replace("`", "``") + "`", wm).withColumnRenamed(key, "_rk")
+    lw = left.df.withWatermark(_quoted(left_ts), wm)
+    rw = right.df.withWatermark(_quoted(right_ts), wm).withColumnRenamed(key, "_rk")
     # raw event-time comparisons with INTERVAL literals: the streaming
     # planner derives its state-eviction bounds by analyzing exactly
     # this shape (wrapping the columns in conversions would defeat it)

@@ -97,3 +97,25 @@ def test_stream_logic_is_mode_blind():
     reads = [n for n in ast.walk(tree) if isinstance(n, ast.Attribute) and n.attr == "isStreaming"]
     assert reads, "the driver reads isStreaming"
     assert [f"{path.name}:{n.lineno}" for n in reads if id(n) not in allowed] == []
+
+
+def test_one_cosine_kernel():
+    """One dense cosine kernel: ``similarity._cosine_blocks`` is the
+    only code under ``bytewax_spark/functions`` that divides a product
+    of vector blocks by ``np.outer`` of their norms, so the rounding,
+    the block budget and the pair and top-k rules built on it cannot
+    drift apart between copies."""
+    root = pathlib.Path(fns.__file__).parent
+    calls = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        calls += [
+            f"{path.relative_to(root)}:{node.lineno}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "outer"
+            and isinstance(node.func.value, ast.Name)
+            and node.func.value.id == "np"
+        ]
+    assert [c.split(":")[0] for c in calls] == ["similarity.py"], calls

@@ -921,6 +921,35 @@ def test_embedding_cosine_pairs_drops_null_and_zero_norm_vectors(spark):
     assert len(got[1]) == 3
 
 
+def test_cosine_pairs_duplicated_and_null_ids_match_duckdb(spark):
+    """Pairs are kept by ``id_a < id_b`` on the ids, not on row
+    positions: two rows sharing an id never pair with each other (no
+    ``id_a == id_b`` row), each of them pairs with every larger id, and
+    a NULL id pairs with nothing, as in the DuckDB self-join. Both the
+    blocked kernel and the multiprobe kernel."""
+    rows = [
+        ("a", [1.0, 0.0], 0),
+        ("b", [0.98, 0.02], 0),
+        ("b", [0.97, 0.03], 0),
+        ("c", [0.99, 0.01], 0),
+        (None, [0.99, 0.02], 0),
+    ]
+    df = spark.createDataFrame(
+        rows, "doc_id string, embedding array<float>, blk int"
+    )
+    got = spark_rows(
+        dedup.embedding_cosine_pairs(df, "embedding", "doc_id", "blk", threshold=0.5)
+    )
+    assert got == duckref.embedding_pairs(df, "embedding", "doc_id", "blk", 0.5)
+    assert len(got[1]) == 5
+    kw = dict(dims=2, n_planes=2, threshold=0.5, seed=3, multiprobe=1)
+    got = spark_rows(dedup.lsh_cosine_pairs(df, "embedding", "doc_id", **kw))
+    want = duckref.multiprobe_pairs(
+        duckref.with_bucket(df, 2, 2, 3), "embedding", "doc_id", "bucket", 0.5
+    )
+    assert got == want
+
+
 def test_embedding_cosine_pairs_block_chunked_kernel_exact(spark, monkeypatch):
     """Skew guard: with the kernel's dense-matrix budget shrunk to a
     few rows per block, a mass-duplicate corpus (every vector

@@ -89,6 +89,32 @@ def test_streaming_windowed_count_append_watermark(spark):
     assert got == {("a", 0): 2, ("b", 0): 1}
 
 
+def test_streaming_window_ts_name_needs_quoting(spark):
+    """An ``EventClock`` column whose name is not a bare SQL identifier
+    windows like any other under a watermark."""
+    ts = lambda m: datetime(2024, 1, 1, 0, m)  # noqa: E731
+    flow = Dataflow("s_window_quoted")
+    s = op.input(
+        "in",
+        flow,
+        TestingSource(
+            [("a", ts(0)), ("a", ts(1)), ("b", ts(2)), ("a", ts(30))],
+            schema="k string, `event ts` timestamp",
+            streaming=True,
+            files=2,
+        ),
+    )
+    counts = win.count_window(
+        "w",
+        op.key_on("key", s, "k"),
+        win.EventClock("event ts", timedelta(minutes=1)),
+        win.TumblingWindower(timedelta(minutes=10)),
+    )
+    op.output("out", counts, MemorySink("s_window_quoted_out"))
+    rows = drain(spark, flow, "s_window_quoted_out", output_mode="append")
+    assert {(r["key"], r["window_start"].minute): r["count"] for r in rows} == {("a", 0): 2, ("b", 0): 1}
+
+
 def test_streaming_custom_fold_window_emits_on_close(spark):
     """Streaming custom (opaque Python) window fold — the reference's
     WindowLogic path: rows buffer per (key, window) in the state store
